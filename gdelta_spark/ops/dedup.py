@@ -158,16 +158,6 @@ def _pairs_from_bands(bands: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_a, doc_b) — distinct pairs sharing any band signature.
-
-    The band-signature table is localCheckpoint-materialized before the
-    self-join: the two join sides otherwise each re-run the full
-    shingle-scan + md5 + min-aggregate subtree (the sig table is 4 narrow
-    rows per doc — linear, tiny next to its input)."""
-    return _pairs_from_bands(_bands_checkpointed(spark, sf_dir))
-
-
 def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-duplicate pairs: (doc_a, doc_b, n_inter, n_union) with
     shingle-Jaccard >= 0.5 (exact integer test).

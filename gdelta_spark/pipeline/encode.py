@@ -23,7 +23,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from gdelta_spark import blocks
@@ -356,22 +355,3 @@ def encode_blocks(
     bin_df = serde.serialize_tokens(tokens_df, keep=("doc_id", "n_tok", "source"))
     return encode_blocks_bin(bin_df, group_bytes=group_bytes, force_codec=force_codec)
 
-
-def encode_blocks_forced(
-    tokens_df: DataFrame, codec_id: int, group_bytes: int | None = None
-) -> DataFrame:
-    """Encode with a single forced codec (raw-fallback guard still applies)."""
-    return encode_blocks(tokens_df, group_bytes=group_bytes, force_codec=codec_id)
-
-
-def partition_summary(blocks_df: DataFrame) -> DataFrame:
-    """Per-partition byte metrics (manifest fields)."""
-    data = blocks_df.filter(F.col("block_id") >= 0)
-    return data.groupBy("part_id").agg(
-        F.first("base_doc_id").alias("base_doc_id"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.array_distinct(F.collect_list("codec")).alias("codecs"),
-    )

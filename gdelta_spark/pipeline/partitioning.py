@@ -77,13 +77,17 @@ def with_salt(
     df: DataFrame,
     group_bytes: int = DEFAULT_GROUP_BYTES,
     stats_df: DataFrame | None = None,
+    plan: DataFrame | None = None,
 ) -> DataFrame:
     """Adds bucket + salt + part_id columns. The salt plan aggregates only
     (source, n_tok) — pass ``stats_df`` (e.g. a column-pruned JVM parquet
     scan) so the stats pass never touches the token payload; the plan side is
-    tiny and broadcast."""
+    tiny and broadcast. A caller that salts several views of one input passes
+    the ``salt_plan`` it built once as ``plan``; ``group_bytes`` and
+    ``stats_df`` are then unused."""
     b = with_buckets(df)
-    plan = salt_plan(with_buckets(stats_df) if stats_df is not None else b, group_bytes)
+    if plan is None:
+        plan = salt_plan(with_buckets(stats_df) if stats_df is not None else b, group_bytes)
     return (
         b.join(F.broadcast(plan.select("source", "bucket", "n_salts")), ["source", "bucket"])
         .withColumn(

@@ -15,6 +15,7 @@ Layout:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -78,6 +79,17 @@ def part_keys(salted_narrow_df: DataFrame) -> DataFrame:
             F.count("*").alias("input_rows"),
         )
     )
+
+
+def content_md5(doc_ids: list[str], payloads: list) -> str:
+    """Payload integrity of one partition, from the exact bytes being encoded
+    (no extra scan): md5 over (doc_id, tok_bytes) in doc_id order, rows with
+    equal doc_ids in input order (one stable sort)."""
+    h = hashlib.md5()
+    for i in sorted(range(len(doc_ids)), key=doc_ids.__getitem__):
+        h.update(doc_ids[i].encode())
+        h.update(bytes(payloads[i]))
+    return h.hexdigest()
 
 
 class Warehouse:
@@ -204,8 +216,12 @@ class Warehouse:
             )
         if _glob.glob(os.path.join(self.manifest_dir, "*.json")):
             srcs.append(
+                # one directory root, not a glob: Spark expands a glob into
+                # one root path per file and lists more than 32 of those
+                # with a Spark job
                 spark.read.schema(self._KEYS_SCHEMA)
-                .json(os.path.join(self.manifest_dir, "*.json"))
+                .option("pathGlobFilter", "*.json")
+                .json(self.manifest_dir)
                 # a corrupt / partially-written JSON parses as an all-null
                 # row under the permissive schema; without this filter the
                 # max_by('_src') merge would let that null-key row override
@@ -221,7 +237,9 @@ class Warehouse:
                 .withColumn("_src", F.lit(1))
             )
         if not srcs:
-            return spark.createDataFrame([], self._KEYS_SCHEMA)
+            # an always-false filter plans as an empty local relation that
+            # the optimizer folds into its consumers: no Spark job
+            return spark.createDataFrame([], self._KEYS_SCHEMA).where(F.lit(False))
         u = srcs[0] if len(srcs) == 1 else srcs[0].unionAll(srcs[1])
         return (
             u.groupBy("part_id")
@@ -257,17 +275,21 @@ class Warehouse:
             return F.broadcast(committed)
         return committed
 
-    def pending(self, spark: SparkSession, salted_narrow: DataFrame) -> DataFrame:
-        """Partitions whose (part_id, key_hash, key_sum, input_rows) is not
-        yet committed — a left-anti join, broadcast while the manifest side
-        is provably small (footer-estimated), shuffle + AQE beyond that.
-        ``salted_narrow`` needs only (part_id, doc_id, n_tok)."""
-        keys = part_keys(salted_narrow)
-        committed = self.maybe_broadcast_committed(self.committed_df(spark))
-        return keys.join(
-            committed,
-            ["part_id", "key_hash", "key_sum", "input_rows"],
-            "left_anti",
+    def key_status(self, spark: SparkSession, salted_narrow: DataFrame) -> DataFrame:
+        """Every partition's key (part_id, key_hash, key_sum, input_rows)
+        with ``done`` = a committed manifest holds that exact key — a left
+        join, broadcast while the manifest side is provably small
+        (footer-estimated), shuffle + AQE beyond that. ``salted_narrow``
+        needs only (part_id, doc_id, n_tok)."""
+        committed = self.committed_df(spark).withColumn("done", F.lit(True))
+        return (
+            part_keys(salted_narrow)
+            .join(
+                self.maybe_broadcast_committed(committed),
+                ["part_id", "key_hash", "key_sum", "input_rows"],
+                "left",
+            )
+            .withColumn("done", F.coalesce(F.col("done"), F.lit(False)))
         )
 
     # -- commit -------------------------------------------------------------
@@ -342,7 +364,7 @@ def encode_and_commit(
     part_prefix: str = "",
     compact_threshold: int = 1024,
 ) -> dict:
-    """Full encode pipeline with checkpoint/resume: salt -> pending anti-join
+    """Full encode pipeline with checkpoint/resume: salt -> pending keys
     -> encode kernel -> per-partition atomic commit (inside the same Spark
     stage via a second applyInPandas that writes from the executor).
 
@@ -358,14 +380,12 @@ def encode_and_commit(
     """
     from gdelta_spark.pipeline import partitioning, serde
 
-    stats_df = None
     if isinstance(tokens, str):
         from gdelta_spark.pipeline import pyscan
 
         # column-pruned JVM scan: feeds BOTH the salt plan and the pending
         # keys without touching the 'tokens' pages
         narrow_src = spark.read.parquet(tokens).select("doc_id", "n_tok", "source")
-        stats_df = narrow_src
         bin_df = pyscan.scan_tokens_binary(spark, tokens)
     elif serde.TOK_BYTES_COL in tokens.columns:
         bin_df = tokens
@@ -387,33 +407,30 @@ def encode_and_commit(
             )
         return df
 
-    salted_narrow = prefix(partitioning.with_salt(narrow_src, gb, stats_df=stats_df))
+    # the salt plan (one small aggregate of the narrow scan) is built ONCE
+    # and salts both the narrow keys side and the payload side
+    plan = partitioning.salt_plan(partitioning.with_buckets(narrow_src), gb).localCheckpoint()
+    salted_narrow = prefix(partitioning.with_salt(narrow_src, plan=plan))
     # pending resolution stays JVM-side: part keys (one row per partition,
-    # derived from the narrow no-payload scan) anti-joined against the
-    # committed manifests — the driver never collects the partition list
-    # (round-2 VERDICT #5: the old collect() was O(partitions) driver
-    # memory at 10^7 parts). localCheckpoint materializes the small pending
-    # table once so the count and the payload join don't re-run the scan.
-    # keys materialized ONCE: the anti-join and n_total both read the
-    # checkpointed table instead of re-running the narrow scan (r3 ADVICE)
-    keys = part_keys(salted_narrow).localCheckpoint()
-    pending = keys.join(
-        wh.maybe_broadcast_committed(wh.committed_df(spark)),
-        ["part_id", "key_hash", "key_sum", "input_rows"],
-        "left_anti",
-    ).localCheckpoint()
-    n_total = keys.count()
-    n_pending = pending.count()
+    # derived from the narrow no-payload scan) flagged against the
+    # committed manifests, materialized ONCE; the driver collects only the
+    # two counts, never the partition list (round-2 VERDICT #5: the old
+    # collect() was O(partitions) driver memory at 10^7 parts)
+    status = wh.key_status(spark, salted_narrow).localCheckpoint()
+    counts = status.agg(
+        F.count("*").alias("total"),
+        F.count_if(~F.col("done")).alias("pending"),
+    ).collect()[0]
+    n_total, n_pending = int(counts["total"]), int(counts["pending"])
     if n_pending == 0:
         return {"partitions": n_total, "encoded": 0, "skipped": n_total}
 
-    salted = prefix(partitioning.with_salt(bin_df, gb, stats_df=stats_df))
+    pending = status.where(~F.col("done")).drop("done")
+    salted = prefix(partitioning.with_salt(bin_df, plan=plan))
     # pending is tiny after materialization -> broadcast hash join on
     # part_id; the per-partition key columns ride along into the kernel so
     # manifests are written without any driver-side lookup table
     work = salted.join(F.broadcast(pending), "part_id")
-
-    import hashlib
 
     import pandas as pd
 
@@ -428,19 +445,12 @@ def encode_and_commit(
         key_hash = int(pdf["key_hash"].iloc[0])
         key_sum = int(pdf["key_sum"].iloc[0])
         input_rows = int(pdf["input_rows"].iloc[0])
-        # payload integrity, from the exact bytes being encoded (no extra
-        # scan): md5 over (doc_id, tok_bytes) in doc_id order
-        h = hashlib.md5()
-        order = sorted(range(len(pdf)), key=lambda i: pdf["doc_id"].iloc[i])
-        for i in order:
-            h.update(pdf["doc_id"].iloc[i].encode())
-            h.update(bytes(pdf["tok_bytes"].iloc[i]))
         manifest = {
             "part_id": part_id,
             "key_hash": key_hash,
             "key_sum": key_sum,
             "input_rows": input_rows,
-            "content_md5": h.hexdigest(),
+            "content_md5": content_md5(pdf["doc_id"].tolist(), pdf["tok_bytes"].tolist()),
             "snapshot": snapshot,
             "n_rows": int(data["n_rows"].sum()),
             "n_tokens": int(data["n_tokens"].sum()),

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import REF_SRC, REPO
 
 from gdelta_spark.codecs.gdelta_codec import (
     gdelta_decode,
@@ -39,13 +40,22 @@ def _mutate(base: bytes, n_edits: int) -> bytes:
     return bytes(b)
 
 
+def _source_pair() -> tuple[bytes, bytes]:
+    """Two related real source files: the reference codec's C++ source and
+    header when the reference checkout is present, else two in-repo codec
+    modules (the self-roundtrip cases need no reference)."""
+    if (REF_SRC / "gdelta.cpp").exists():
+        return (REF_SRC / "gdelta.cpp").read_bytes(), (REF_SRC / "gdelta.h").read_bytes()
+    pkg = REPO / "gdelta_spark"
+    return (pkg / "codecs" / "gdelta_codec.py").read_bytes(), (pkg / "gear.py").read_bytes()
+
+
 def _cases() -> list[tuple[str, bytes, bytes]]:
-    cpp = open("/root/reference/gdelta.cpp", "rb").read()
-    hdr = open("/root/reference/gdelta.h", "rb").read()
+    src, other = _source_pair()
     blob = _rand_bytes(5000)
     cases = [
-        ("ref-pair-fwd", cpp, hdr),
-        ("ref-pair-rev", hdr, cpp),
+        ("ref-pair-fwd", src, other),
+        ("ref-pair-rev", other, src),
         ("identical", blob, blob),
         ("empty-target", blob, b""),
         ("empty-base", b"", blob),

@@ -165,3 +165,62 @@ def test_mixed_dup_cluster_base_election():
     dec = decode_kernel._decode_group(out)
     m = dict(zip(dec["doc_id"], dec["tok_bytes"]))
     assert all(m[d] == b for d, b in zip(pdf["doc_id"], pdf["tok_bytes"]))
+
+
+def test_pending_resolution_summaries(spark, tmp_path):
+    """Fresh, fully committed and partially committed (one manifest
+    deleted) warehouses over the parquet-path input: pinned summary dicts
+    and manifest content hashes."""
+    import glob
+    import json
+
+    corpus, root = str(tmp_path / "corpus"), str(tmp_path / "wh")
+    generator.write_tokens_table(spark, corpus, rows_per_regime=12, seed=5, num_partitions=3)
+    gb = 1 << 18
+    fresh = warehouse.encode_and_commit(spark, corpus, root, group_bytes=gb)
+    assert fresh == {
+        "partitions": 28, "encoded": 28, "skipped": 0,
+        "rows": 96, "raw_bytes": 1099764, "enc_bytes": 197831,
+    }
+    assert warehouse.encode_and_commit(spark, corpus, root, group_bytes=gb) == {
+        "partitions": 28, "encoded": 0, "skipped": 28,
+    }
+    os.remove(sorted(glob.glob(os.path.join(root, "manifests", "*.json")))[1])
+    assert warehouse.encode_and_commit(spark, corpus, root, group_bytes=gb) == {
+        "partitions": 28, "encoded": 1, "skipped": 27,
+        "rows": 4, "raw_bytes": 6880, "enc_bytes": 1573,
+    }
+    md5s = sorted(
+        json.load(open(f))["content_md5"]
+        for f in glob.glob(os.path.join(root, "manifests", "*.json"))
+    )
+    assert len(md5s) == 28
+    assert md5s[:3] == [
+        "02954d07185c78fe49d22ed5c515aeab",
+        "0e46b0bd8d87c732b79bda2b473e6c35",
+        "143f1367c6d2719be51db0a45926b60b",
+    ]
+
+
+def test_content_md5_duplicate_doc_ids():
+    """One stable sort of the doc_id list gives the same digest as the
+    per-row index sort it replaced, rows with equal doc_ids included."""
+    import hashlib
+
+    import pandas as pd
+
+    pdf = pd.DataFrame({
+        "doc_id": ["b", "a", "b", "c", "a", "b"],
+        "tok_bytes": [b"\x01", b"\x02\x00", b"\x03", b"", b"\x05", b"\x06\x07"],
+    })
+    h = hashlib.md5()
+    for i in sorted(range(len(pdf)), key=lambda i: pdf["doc_id"].iloc[i]):
+        h.update(pdf["doc_id"].iloc[i].encode())
+        h.update(bytes(pdf["tok_bytes"].iloc[i]))
+    got = warehouse.content_md5(pdf["doc_id"].tolist(), pdf["tok_bytes"].tolist())
+    assert got == h.hexdigest()
+    # the order of equal doc_ids matters, so the pin above is not vacuous
+    swapped = pdf.iloc[[0, 1, 5, 3, 4, 2]]
+    assert warehouse.content_md5(
+        swapped["doc_id"].tolist(), swapped["tok_bytes"].tolist()
+    ) != got
