@@ -51,7 +51,7 @@ def gdelta_rows_payload(
 
     if base is None:
         raise ValueError("gdelta block codec requires a base chunk")
-    from gdelta_spark.codecs.gdelta_codec import precompute_base_index
+    from gdelta_spark.codecs.gdelta_codec import BaseIndex
     from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
 
     if rows_bytes is None:
@@ -59,7 +59,7 @@ def gdelta_rows_payload(
     if len(rows_bytes) > 1:
         # lockstep batched group encoder: byte-identical blobs, amortizes
         # per-probe fixed numpy dispatch across all rows of the group
-        blobs = gdelta_encode_group(rows_bytes, base, precompute_base_index(base))
+        blobs = gdelta_encode_group(rows_bytes, base, BaseIndex(base))
     else:
         blobs = [gdelta_encode(rb, base) for rb in rows_bytes]
     lens = np.array([len(b) for b in blobs], dtype=np.int64)

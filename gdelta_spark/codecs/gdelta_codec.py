@@ -588,7 +588,7 @@ def _build_hash_table(
     beg_size: int,
     end_size: int,
     bit: int,
-    base_fps: "np.ndarray | BaseIndex | None" = None,
+    base_fps: BaseIndex | None = None,
 ) -> np.ndarray:
     """Single-slot hash table over the base interior: fingerprint top ``bit``
     bits -> packed u64 entry ``(abs_pos << 32) | (fp & 0xFFFFFFFF)``, 0 =
@@ -613,7 +613,7 @@ def _build_hash_table(
     n_fps = interior_len - STRLOOK + 1
     if n_fps <= 2:
         return table
-    if isinstance(base_fps, BaseIndex):
+    if base_fps is not None:
         # zero-compute build: strided views of the per-base precomputed index
         # and packed-entry arrays, one fancy-index scatter. Positions strictly
         # increase along the views, so C-order fancy assignment == the
@@ -624,16 +624,9 @@ def _build_hash_table(
             return table
         table[idxv] = base_fps.packed[beg_size + 2 : beg_size + n_fps : STRLSTEP]
         return table
-    if base_fps is not None:
-        # fingerprints shared across rows of a group: a strided VIEW of the
-        # full-base precompute (fp of interior position p == fp of base
-        # position beg+p) — no index arange, no gather
-        sampled = base_fps[beg_size + 2 : beg_size + n_fps : STRLSTEP]
-        abs_start = beg_size + 2
-    else:
-        fps = _gear_fingerprints(base8[beg_size : base8.size - end_size])
-        sampled = fps[2:n_fps:STRLSTEP]
-        abs_start = beg_size + 2
+    fps = _gear_fingerprints(base8[beg_size : base8.size - end_size])
+    sampled = fps[2:n_fps:STRLSTEP]
+    abs_start = beg_size + 2
     if sampled.size == 0:
         return table
     # .view(int64) = zero-copy reinterpret; top-bits shift keeps values < 2^63
@@ -673,21 +666,8 @@ def _last_mismatch_run(a: np.ndarray, b: np.ndarray, limit: int) -> int:
     return limit if not rev[i] else i
 
 
-def precompute_base_fps(base: bytes) -> np.ndarray:
-    """Full-base Gear fingerprints, reusable across many gdelta_encode calls
-    against the same base (per-group amortization in the encode kernel)."""
-    return _gear_fingerprints(np.frombuffer(base, dtype=np.uint8))
-
-
-def precompute_base_index(base: bytes) -> BaseIndex:
-    """Full per-base precompute (fingerprints + packed table entries + table
-    cache); pass as ``base_fps`` to ``gdelta_encode`` for the fastest
-    many-rows-one-base path."""
-    return BaseIndex(base)
-
-
 def gdelta_encode(
-    new: bytes, base: bytes, base_fps: "np.ndarray | BaseIndex | None" = None
+    new: bytes, base: bytes, base_fps: BaseIndex | None = None
 ) -> bytes:
     new8 = np.frombuffer(new, dtype=np.uint8)
     base8 = np.frombuffer(base, dtype=np.uint8)
@@ -732,7 +712,7 @@ def gdelta_encode(
     interior = base_size - beg_size - end_size
     bit = (interior + 10).bit_length()
     table = None
-    if isinstance(base_fps, BaseIndex):
+    if base_fps is not None:
         # lazy: small probe segments use the sorted-key winner query instead
         # of a table; the table is built (and cached) only if a big segment
         # ever loads. A cached table is used immediately when present.
@@ -745,7 +725,7 @@ def gdelta_encode(
         fps_full = bi.fps
     else:
         bi = None
-        table = _build_hash_table(base8, beg_size, end_size, bit, base_fps)
+        table = _build_hash_table(base8, beg_size, end_size, bit)
 
     n2 = new_size - end_size  # exclusive end of the scan region
     tgt = new8[beg_size:n2]

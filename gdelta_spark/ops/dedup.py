@@ -33,24 +33,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gdelta_spark.pipeline.partitioning import spread_input
+from gdelta_spark.pipeline.session import session_table
+
 SHINGLE = 5
 N_BANDS = 4
-
-# session-scoped cache of the materialized band-signature table (the LSH
-# index over shingles): neardup_pairs / neardup_keep / neardup_components
-# all consume it, on both sides of the candidate self-join. Keyed by
-# applicationId, so every new session recomputes from the parquet inputs —
-# the same persisted-index economics as the IVF codebook cache in ops/ann.
-_BANDS_CACHE_CAP = 4
-_BANDS_CACHE: "dict[tuple[str, str], DataFrame]" = {}
-_ARRAYS_CACHE: "dict[tuple[str, str], DataFrame]" = {}
-
-
-def _cache_put(cache: dict, key, value) -> None:
-    cache[key] = value
-    while len(cache) > _BANDS_CACHE_CAP:
-        cache.pop(next(iter(cache)))
-
 
 def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, arr: array<string>, n) — each doc's DISTINCT shingle set as
@@ -59,15 +46,9 @@ def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded-distinct shape this replaces shuffled one row per (doc,
     shingle) through a dedup exchange. The exploded view for the band-sig
     aggregate is a map-side explode of this checkpoint."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ARRAYS_CACHE.get(key)
-    if cached is None:
-        from gdelta_spark.pipeline.partitioning import spread_input
 
-        d = spread_input(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"),
-            memo_key=f"{sf_dir}/documents.parquet",
-        )
+    def build() -> DataFrame:
+        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
         w = d.select("doc_id", F.split("text", " ").alias("w")).filter(
             F.size("w") >= SHINGLE
         )
@@ -76,11 +57,11 @@ def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" i -> concat_ws(' ', slice(w, i, {SHINGLE}))))"
         )
         a = w.select("doc_id", grams.alias("arr"))
-        cached = a.select(
+        return a.select(
             "doc_id", "arr", F.size("arr").cast("long").alias("n")
         ).localCheckpoint()
-        _cache_put(_ARRAYS_CACHE, key, cached)
-    return cached
+
+    return session_table(spark, sf_dir, "shingle_arrays", build)
 
 
 def _shingles_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,12 +73,15 @@ def _shingles_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bands_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BANDS_CACHE.get(key)
-    if cached is None:
-        cached = _band_sigs(_shingles_checkpointed(spark, sf_dir)).localCheckpoint()
-        _cache_put(_BANDS_CACHE, key, cached)
-    return cached
+    """(doc_id, band, sig) — the MinHash band-signature table (the LSH index
+    over shingles), shared per session: neardup_pairs / neardup_keep /
+    neardup_components consume it on both sides of the candidate self-join."""
+    return session_table(
+        spark,
+        sf_dir,
+        "minhash_bands",
+        lambda: _band_sigs(_shingles_checkpointed(spark, sf_dir)).localCheckpoint(),
+    )
 
 
 def _band_sigs(shingles: DataFrame) -> DataFrame:
@@ -234,6 +218,8 @@ def min_label_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     component and only decreases; min over neighbors and label-of-label
     both preserve it, so the fixpoint is the component minimum regardless
     of how the two updates interleave."""
+    # symmetric edges: every doc_b is also a doc_a, so every message target
+    # has a self row in labels and old_label below is never null
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).localCheckpoint()
@@ -463,12 +449,7 @@ def simhash_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     same md5-derived ±1 trick as the ANN hyperplanes (ops/ann.py), so a
     SQL oracle reproduces it exactly.
     """
-    from gdelta_spark.pipeline.partitioning import spread_input
-
-    d = spread_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        memo_key=f"{sf_dir}/documents.parquet",
-    )
+    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     # materialize md5 ONCE per word in its own projection: common-subexpression
     # elimination does not span the 16 aggregate expressions, so inlining
     # F.md5 into each bit's F.when would hash every word 16 times (explode must

@@ -17,10 +17,7 @@ from pyspark.sql import DataFrame
 DEFAULT_GROUP_BYTES = 64 << 20
 
 
-_SPREAD_MEMO: dict[tuple[str, str], int] = {}
-
-
-def spread_input(df: DataFrame, memo_key: str | None = None) -> DataFrame:
+def spread_input(df: DataFrame) -> DataFrame:
     """Ensure at least defaultParallelism partitions before expensive
     per-row compute (tokenize, md5 fan-outs, distance kernels). The test
     tables arrive as ONE parquet row group, so every map-side kernel
@@ -28,25 +25,14 @@ def spread_input(df: DataFrame, memo_key: str | None = None) -> DataFrame:
     unsplittable-input case of guide §2.5 ("repartition immediately after
     the read"). No-op when the scan is already parallel, which is the
     production shape (many splits), so this never shrinks parallelism or
-    adds a shuffle at scale.
-
-    ``memo_key`` (e.g. the input path) memoizes the partition-count probe
-    per session: ``df.rdd`` compiles the physical plan, which costs real
-    driver time when repeated for every query over the same table."""
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    key = (spark.sparkContext.applicationId, memo_key) if memo_key else None
-    cur = _SPREAD_MEMO.get(key) if key else None
-    if cur is None:
-        try:
-            cur = df.rdd.getNumPartitions()
-        except Exception:  # noqa: BLE001 — planning-only probe; never fatal
-            return df
-        if key:
-            _SPREAD_MEMO[key] = cur
-            while len(_SPREAD_MEMO) > 16:
-                _SPREAD_MEMO.pop(next(iter(_SPREAD_MEMO)))
+    adds a shuffle at scale."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        cur = df.rdd.getNumPartitions()
+    except Exception:  # noqa: BLE001 — planning-only probe; never fatal
+        return df
     return df.repartition(n) if cur < n else df
+
 
 PART_COLS = ("source", "bucket", "salt")
 

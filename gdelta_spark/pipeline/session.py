@@ -1,10 +1,14 @@
-"""SparkSession factory with the engine's required configs."""
+"""SparkSession factory with the engine's required configs, and the tables
+shared across the queries of one session."""
 
 from __future__ import annotations
 
 import os
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -59,3 +63,31 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+# Corpus-derived tables shared across the queries of one session: the IVF
+# codebook and assignment, the quantized embeddings, the LSH/MinHash band
+# signatures, the shingle sets and the vector count. Each is built once per
+# (Spark application, corpus) and probed by every query that needs it, the
+# economics of a persisted index (jobs/ann_index_job.py). The applicationId
+# in the key makes every new session rebuild from the parquet inputs. One LRU
+# over corpora, capped small because the values are localCheckpoint-
+# materialized; all kinds of a corpus are evicted together, and eviction only
+# drops the reference.
+SESSION_TABLES_CAP = 4
+_SESSION_TABLES: dict[tuple[str, str], dict[Hashable, object]] = {}
+
+
+def session_table(
+    spark: SparkSession, sf_dir: str, kind: Hashable, build: Callable[[], T]
+) -> T:
+    """The ``kind`` table of corpus ``sf_dir`` in this session: ``build()``
+    on the first call, the same object afterwards."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    tables = _SESSION_TABLES.pop(key, {})
+    _SESSION_TABLES[key] = tables  # most recently used last
+    while len(_SESSION_TABLES) > SESSION_TABLES_CAP:
+        _SESSION_TABLES.pop(next(iter(_SESSION_TABLES)))
+    if kind not in tables:
+        tables[kind] = build()
+    return tables[kind]

@@ -180,17 +180,16 @@ def test_batch_decode_empty_and_single():
 def test_base_index_encode_identical():
     """BaseIndex fast path (cached tables, fancy-assign scatter, zero-compute
     strided builds) must not change a single emitted byte vs the plain path."""
-    from gdelta_spark.codecs.gdelta_codec import BaseIndex, precompute_base_fps
+    from gdelta_spark.codecs.gdelta_codec import BaseIndex
 
     for name, base, target in CASES:
         if not base:
             continue
         bi = BaseIndex(base)
         plain = gdelta_encode(target, base)
-        with_fps = gdelta_encode(target, base, precompute_base_fps(base))
         with_index = gdelta_encode(target, base, bi)
         again = gdelta_encode(target, base, bi)  # cached-table path
-        assert plain == with_fps == with_index == again, name
+        assert plain == with_index == again, name
 
 
 def test_base_index_table_matches_plain_build():

@@ -10,9 +10,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from gdelta_spark.codecs.gdelta_codec import (
+    BaseIndex,
     gdelta_decode,
     gdelta_encode,
-    precompute_base_index,
 )
 from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
 from gdelta_spark.fixtures import REGIMES, base_sequence, make_tokens
@@ -25,7 +25,7 @@ def test_group_matches_single_per_regime(regime):
         np.asarray(make_tokens(7, regime, i), np.int32).tobytes()
         for i in range(40)
     ]
-    grp = gdelta_encode_group(rows, base, precompute_base_index(base))
+    grp = gdelta_encode_group(rows, base, BaseIndex(base))
     for i, (g, r) in enumerate(zip(grp, rows)):
         assert g == gdelta_encode(r, base), f"{regime} row {i}"
         assert gdelta_decode(g, base) == r
@@ -42,7 +42,7 @@ def test_group_edge_rows():
         b"\x00" * 4000,  # no match anywhere
         base[200:300] + b"XYZ" + base[300:1200],
     ]
-    grp = gdelta_encode_group(rows, base, precompute_base_index(base))
+    grp = gdelta_encode_group(rows, base, BaseIndex(base))
     for i, (g, r) in enumerate(zip(grp, rows)):
         assert g == gdelta_encode(r, base), i
         assert gdelta_decode(g, base) == r
@@ -51,7 +51,7 @@ def test_group_edge_rows():
 def test_group_tiny_and_empty_base():
     for base in (b"", b"ab", b"x" * 40):
         rows = [b"", b"hello world hello world!", base * 3]
-        grp = gdelta_encode_group(rows, base, precompute_base_index(base) if base else None)
+        grp = gdelta_encode_group(rows, base, BaseIndex(base) if base else None)
         for i, (g, r) in enumerate(zip(grp, rows)):
             assert g == gdelta_encode(r, base), (len(base), i)
             assert gdelta_decode(g, base) == r
@@ -88,7 +88,7 @@ def group_case(draw):
 @given(case=group_case())
 def test_group_matches_single_fuzz(case):
     base, rows = case
-    grp = gdelta_encode_group(rows, base, precompute_base_index(base) if base else None)
+    grp = gdelta_encode_group(rows, base, BaseIndex(base) if base else None)
     for g, r in zip(grp, rows):
         assert g == gdelta_encode(r, base)
         assert gdelta_decode(g, base) == r
@@ -122,8 +122,6 @@ def test_dense_global_winner_equals_searchsorted(monkeypatch):
     pure sorted-key searchsorted query it replaced, on every regime —
     including rows with suffix elision, where the global slot max can sit
     inside the elided tail and the fallback path must fire."""
-    from gdelta_spark.codecs.gdelta_codec import BaseIndex
-
     for regime in REGIMES:
         rows = [
             make_tokens(7, regime, i).astype("<i4").tobytes() for i in range(12)
