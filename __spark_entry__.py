@@ -19,6 +19,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gdelta_spark.pipeline.session import input_table, sorted_small
+
 SALT_BUDGET_BYTES = 1 << 20  # small so sf0.01 actually exercises salting
 VOCAB = 50_000
 
@@ -31,10 +33,13 @@ def _stream_partitions(inbox: str, session_setting: str | int) -> int:
     coalesces them, so every micro-batch otherwise schedules and commits
     state files for ~2x#cores near-empty partitions. Derived from input
     size, so a larger SF scales the count back up; falls back to the
-    session setting if the inbox is not a listable local path."""
+    session setting if the inbox is not a local directory (an ``s3://``
+    path globs to nothing rather than failing) or cannot be listed."""
     import glob
     import os
 
+    if not os.path.isdir(inbox):
+        return int(session_setting)
     try:
         nbytes = sum(
             os.path.getsize(p) for p in glob.glob(os.path.join(inbox, "*.parquet"))
@@ -58,7 +63,7 @@ def _stream_tmpdir(prefix: str) -> str:
 
 def documents_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule input table derived deterministically from documents."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = input_table(spark, sf_dir, "documents")
     # split once in its own projection (two inlined uses would evaluate it
     # twice per row)
     w = df.select(
@@ -94,7 +99,7 @@ def _roundtrip_report(spark: SparkSession, sf_dir: str, codec: str | None) -> Da
     # region and is recomputed from the parquet input on every invocation.
     bin_df = serde.serialize_tokens(
         tokens_df, keep=("doc_id", "n_tok", "source")
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
     force = None if codec is None else core.CODEC_IDS[codec]
     blocks_df = encode_mod.encode_blocks_bin(
         bin_df, group_bytes=SALT_BUDGET_BYTES, force_codec=force
@@ -114,20 +119,19 @@ def _q_roundtrip(codec: str | None) -> Callable[[SparkSession, str], DataFrame]:
 
 def _q_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = documents_tokens(spark, sf_dir)
-    return (
-        t.groupBy("source")
-        .agg(
+    return sorted_small(
+        t.groupBy("source").agg(
             F.count("*").alias("n_docs"),
             F.sum("n_tok").alias("sum_tok"),
             F.min("n_tok").alias("min_tok"),
             F.max("n_tok").alias("max_tok"),
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 
 def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     return (
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
@@ -139,11 +143,12 @@ def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = documents_tokens(spark, sf_dir)
-    return (
+    return sorted_small(
         t.withColumn("bucket", F.floor(F.log2(F.col("n_tok") + F.lit(1))).cast("int"))
         .groupBy("source", "bucket")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("sum_tok"))
-        .orderBy("source", "bucket")
+        .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("sum_tok")),
+        "source",
+        "bucket",
     )
 
 
@@ -165,14 +170,13 @@ def _q_salt_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        d.groupBy("source")
-        .agg(
+    d = input_table(spark, sf_dir, "documents")
+    return sorted_small(
+        d.groupBy("source").agg(
             F.count("*").alias("n_docs"),
             F.countDistinct(F.md5("text")).alias("n_distinct"),
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 
@@ -193,7 +197,7 @@ def _q_resume_pending(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_event_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run-length statistics via window functions (the RLE probe as SQL)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = input_table(spark, sf_dir, "events")
     e.createOrReplaceTempView("events_v")
     return spark.sql(
         """
@@ -218,7 +222,7 @@ def _q_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature is min(md5(word || band)); docs sharing a band signature are
     candidate pairs. md5 is identical across Spark and DuckDB, so the whole
     LSH construction is oracle-checkable."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     d.createOrReplaceTempView("docs_mh")
     return spark.sql(
         """
@@ -246,7 +250,7 @@ def _q_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-quality stats per source (integer-only so hashes match):
     chars, words, docs below a length floor."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     return (
         d.groupBy("source")
         .agg(
@@ -260,7 +264,7 @@ def _q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_lang_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     return (
         d.groupBy("lang")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
@@ -278,9 +282,9 @@ def _q_compression_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides (see _roundtrip_report)
     bin_df = serde.serialize_tokens(
         tokens_df, keep=("doc_id", "n_tok", "source")
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
     blocks_df = encode_mod.encode_blocks_bin(bin_df, group_bytes=SALT_BUDGET_BYTES)
-    return (
+    return sorted_small(
         blocks_df.filter(F.col("block_id") >= 0)
         .withColumn("source", F.split("part_id", "/").getItem(0))
         .groupBy("source", "codec")
@@ -288,8 +292,9 @@ def _q_compression_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_rows").alias("n_rows"),
             F.sum("raw_bytes").alias("raw_bytes"),
             F.sum("enc_bytes").alias("enc_bytes"),
-        )
-        .orderBy("source", "codec")
+        ),
+        "source",
+        "codec",
     )
 
 
@@ -508,7 +513,7 @@ def _q_streaming_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        input_table(spark, sf_dir, "events")
         .select("event_id", "ts", "event_type")
     )
     tmp = _stream_tmpdir("gdelta_stream_win_")
@@ -576,7 +581,7 @@ def _q_streaming_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        input_table(spark, sf_dir, "events")
         .select("event_id", "ts", "event_type")
     )
     tmp = _stream_tmpdir("gdelta_stream_app_")
@@ -654,7 +659,7 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gdelta_spark.pipeline.streaming import first_seen_dedup
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = input_table(spark, sf_dir, "documents").select("doc_id", "text")
     wave0 = d.select("doc_id", "text", F.lit(0).alias("wave"))
     wave1 = (
         d.filter(F.col("doc_id") % 5 == 0)

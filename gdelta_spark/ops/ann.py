@@ -35,8 +35,12 @@ Operators:
 Everything is integer-exact so a DuckDB oracle can reproduce it:
 embeddings are quantized ``floor(x * 10000)`` in float64 (bit-exact in
 both engines), hyperplane signs come from md5 parity, and dot products
-are int64 sums. No Python UDFs — transform/zip_with/aggregate are
-JVM-side, codegen'd.
+are int64 sums. No Python UDFs: everything runs in the JVM. The array
+higher-order functions (transform/zip_with/aggregate) are
+``CodegenFallback`` expressions, evaluated interpreted row by row inside
+otherwise code-generated stages, so each corpus pass of the distance and
+argmin expressions is real executor time: the IVF build computes the
+corpus -> coarse-cell argmin once and reuses it (``_train_ivf``).
 """
 
 from __future__ import annotations
@@ -46,8 +50,9 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from gdelta_spark.ops.dedup import kept_counts
 from gdelta_spark.pipeline.partitioning import spread_input
-from gdelta_spark.pipeline.session import session_table
+from gdelta_spark.pipeline.session import input_table, session_table, sorted_small
 
 QUANT = 10_000  # fixed-point scale: |component| <= 1 -> |q| <= 10000
 DIM = 64
@@ -97,12 +102,12 @@ def quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         # one-row-group test files would pin every downstream distance/sig
         # kernel to a single core (no-op on parallel scans)
-        e = spread_input(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+        e = spread_input(input_table(spark, sf_dir, "embeddings"))
         q = F.transform(
             "embedding",
             lambda x: F.floor(x.cast("double") * F.lit(QUANT)).cast("long"),
         )
-        return e.select("vec_id", q.alias("q")).localCheckpoint()
+        return e.select("vec_id", q.alias("q")).localCheckpoint(eager=False)
 
     return session_table(spark, sf_dir, "quantized", build)
 
@@ -123,30 +128,36 @@ def _sqdist(a, b):
     )
 
 
-def _topk_unordered(
+def _exact_topk(
     spark: SparkSession, sf_dir: str, n_queries: int, k: int
 ) -> DataFrame:
-    """ann_topk without the final presentation sort — internal consumers
-    (ann_recall's exact baseline) only semi-join/count the pairs, so the
-    range-partition sort would be a wasted exchange."""
-    v = quantized_embeddings(spark, sf_dir)
-    qs = v.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    dotted = (
-        v.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qq"), F.col("q")).alias("dot"),
+    """(query_id, neighbor_id, dot, rnk) — the exact top-k, unordered,
+    materialized and shared per session (n_queries * k rows): ``ann_topk``
+    presents it and ``ann_recall`` takes it as the exact baseline without
+    a second corpus pass."""
+
+    def build() -> DataFrame:
+        v = quantized_embeddings(spark, sf_dir)
+        qs = v.filter(F.col("vec_id") < n_queries).select(
+            F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    return (
-        dotted.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-    )
+        dotted = (
+            v.crossJoin(F.broadcast(qs))
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select(
+                "query_id",
+                F.col("vec_id").alias("neighbor_id"),
+                _dot(F.col("qq"), F.col("q")).alias("dot"),
+            )
+        )
+        w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
+        return (
+            dotted.withColumn("rnk", F.row_number().over(w).cast("int"))
+            .filter(F.col("rnk") <= k)
+            .localCheckpoint(eager=False)
+        )
+
+    return session_table(spark, sf_dir, ("exact_topk", n_queries, k), build)
 
 
 def ann_topk(
@@ -157,7 +168,7 @@ def ann_topk(
     Plan shape: broadcast the (tiny) query side, stream the corpus once,
     window top-k per query. Ties broken by neighbor_id for determinism.
     """
-    return _topk_unordered(spark, sf_dir, n_queries, k).orderBy("query_id", "rnk")
+    return sorted_small(_exact_topk(spark, sf_dir, n_queries, k), "query_id", "rnk")
 
 
 def _plane_sign_lists(n_planes: int) -> list[list[int]]:
@@ -184,8 +195,8 @@ def simhash_band_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     width stays ~LSH_CELL_WIDTH at any scale.
 
     SHUFFLE-FREE: each projection is ``aggregate(zip_with(q, <literal ±1
-    array>, x*s))`` — a whole-stage-codegen expression over the embedding
-    array column. No posexplode, no join, no aggregation: the round-3
+    array>, x*s))`` — a per-row expression over the embedding array column
+    (interpreted, see the module docstring). No posexplode, no join, no aggregation: the round-3
     version shuffled 32 (vec_id, p) partial-sum rows per vector for
     arithmetic a single map-side expression computes (VERDICT r3 "what's
     wrong" #3). The only row multiplication is the final explode to
@@ -226,7 +237,7 @@ def simhash_band_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"posexplode(array({', '.join(band_exprs)})) AS (band, sig)",
             )
             .select("vec_id", F.col("band").cast("int").alias("band"), "sig", "q")
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
 
     return session_table(spark, sf_dir, "lsh_bands", build)
@@ -352,7 +363,7 @@ def n_vectors(spark: SparkSession, sf_dir: str) -> int:
 
             return pq.ParquetFile(f"{sf_dir}/embeddings.parquet").metadata.num_rows
         except Exception:  # noqa: BLE001 — non-local path/layout: count it
-            return spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+            return input_table(spark, sf_dir, "embeddings").count()
 
     return session_table(spark, sf_dir, "n_vectors", build)
 
@@ -406,6 +417,113 @@ def _lloyd_update(assigned: DataFrame, keys: list[str]) -> DataFrame:
     return assigned.groupBy(*keys).agg(F.expr(avg_arr))
 
 
+def _sub_arrays(sub: DataFrame) -> DataFrame:
+    """(c1, ss) — each coarse cell's sub-centroids folded into ONE array row
+    (k1 rows), the per-row argmin input after the join on c1."""
+    return sub.groupBy("c1").agg(
+        F.collect_list(F.struct(F.col("sub").alias("cell"), F.col("cq"))).alias("ss")
+    )
+
+
+def _with_fallback(upd: DataFrame, coarse: DataFrame) -> DataFrame:
+    """(c1, ss) — per coarse cell, the updated sub-centroids as one array
+    row; a coarse cell with none falls back to one sub-cell at its coarse
+    centroid (sub 0). The fallback rows ride in the same aggregate that
+    folds the centroids into arrays, so finding the empty cells costs no
+    extra exchange."""
+    rows = upd.select("c1", "sub", "cq", F.lit(False).alias("fb")).unionByName(
+        coarse.select(
+            F.col("cell").alias("c1"), F.lit(0).cast("int").alias("sub"), "cq",
+            F.lit(True).alias("fb"),
+        )
+    )
+    return rows.groupBy("c1").agg(
+        F.collect_list(F.struct("fb", F.col("sub").alias("cell"), "cq")).alias("all")
+    ).selectExpr(
+        "c1",
+        "transform(IF(exists(all, s -> NOT s.fb), filter(all, s -> NOT s.fb), all),"
+        " s -> named_struct('cell', s.cell, 'cq', s.cq)) AS ss",
+    )
+
+
+def _train_ivf(
+    spark: SparkSession, sf_dir: str, iters: int
+) -> "tuple[DataFrame, DataFrame, int, DataFrame]":
+    """(coarse, sub, k2, assign): the trained two-level codebook (see
+    ``kmeans_codebooks``) and the corpus assigned to it (see ``ivf_assign``),
+    built together and shared per session (a session table per ``iters``).
+
+    The corpus -> coarse-cell assignment ``tr1`` is computed ONCE: the
+    level-2 seed window, every level-2 Lloyd round and the final two-level
+    assignment all read it. The argmin runs interpreted (see the module
+    docstring), so each avoided corpus pass is real executor time. ``tr1``
+    is cached only for the build and released at its end; what stays pinned
+    is the two codebooks and the final assignment, as before."""
+
+    def build() -> "tuple[DataFrame, DataFrame, int, DataFrame]":
+        n = n_vectors(spark, sf_dir)
+        k = cells_for(n)
+        k1 = coarse_cells_for(k)
+        k2 = sub_cells_for(k)
+        step = km_sample_step(n)
+        v = quantized_embeddings(spark, sf_dir)
+
+        # -- level 1 (seeds from the pool; Lloyd over the corpus)
+        cents = v.filter(
+            (F.col("vec_id") % step == 0) & (F.col("vec_id") < k1 * step)
+        ).select(
+            (F.col("vec_id") / step).cast("int").alias("cell"), F.col("q").alias("cq")
+        )
+        for _ in range(iters):
+            cents = _lloyd_update(_assign_cells(v, cents), ["cell"])
+        coarse = cents.localCheckpoint(eager=False)
+
+        # -- level 2: fixed group membership from the final coarse codebook
+        tr1 = (
+            _assign_cells(v, coarse)
+            .select("vec_id", F.col("cell").alias("c1"), "q")
+            .localCheckpoint(eager=False)
+        )
+        w_seed = Window.partitionBy("c1").orderBy("vec_id")
+        seeds = (
+            tr1.filter(F.col("vec_id") % step == 0)
+            .withColumn("sub", (F.row_number().over(w_seed) - 1).cast("int"))
+            .filter(F.col("sub") < k2)
+            .select("c1", "sub", F.col("q").alias("cq"))
+        )
+        sub_arr = _sub_arrays(seeds)
+        for _ in range(iters):
+            # per-c1 sub-centroid arrays: the argmin then runs as a per-row
+            # expression after the c1 join — the corpus is not re-shuffled by
+            # vec_id (see _assign_cells); the join itself stays keyed on c1
+            # (k1 rows of arrays — AQE broadcasts while it fits)
+            assigned = tr1.join(sub_arr, "c1").selectExpr(
+                "vec_id", "c1", "q", _argmin_expr("ss", "cell") + " AS sub"
+            )
+            sub_arr = _with_fallback(_lloyd_update(assigned, ["c1", "sub"]), coarse)
+        sub_arr = sub_arr.localCheckpoint(eager=False)
+        sub = sub_arr.select("c1", F.inline("ss")).select(
+            "c1", F.col("cell").alias("sub"), "cq"
+        )
+
+        # -- final greedy two-level assignment: nearest sub-centroid within
+        # the vector's coarse cell; ties break to the smallest cell id at
+        # both levels; final cell id = c1 * k2 + sub
+        assign = (
+            tr1.join(sub_arr, "c1")
+            .selectExpr("vec_id", "c1", "q", _argmin_expr("ss", "cell") + " AS sub")
+            .select(
+                "vec_id",
+                (F.col("c1") * k2 + F.col("sub")).cast("int").alias("cell"),
+                "q",
+            )
+            .localCheckpoint(eager=False)
+        )
+        return coarse, sub, k2, assign
+
+    return session_table(spark, sf_dir, ("ivf", iters), build)
+
+
 def kmeans_codebooks(
     spark: SparkSession, sf_dir: str, iters: int = KM_ITERS
 ) -> tuple[DataFrame, DataFrame, int]:
@@ -434,108 +552,28 @@ def kmeans_codebooks(
        >= 1 sub-cell and corpus assignment is total.
 
     Scale shape: each Lloyd round is one assignment-shaped linear pass
-    (broadcast centroids + map-side max_by — the corpus never shuffles);
+    (broadcast centroids + per-row argmin — the corpus never shuffles);
     the coarse codebook is sqrt(k) rows (broadcast at any scale); the sub
     codebook is keyed by c1 and joins on it — never broadcast-required.
     Both halves are localCheckpoint-materialized and shared per session
-    (a session table per ``iters``): ann_ivf / ann_ivf2 / ann_recall in one
-    session share ONE training, the same economics as
+    with the assignment (``_train_ivf``): ann_ivf / ann_ivf2 / ann_recall in
+    one session share ONE training, the same economics as
     jobs/ann_index_job.py's persisted index."""
-
-    def build() -> "tuple[DataFrame, DataFrame, int]":
-        n = n_vectors(spark, sf_dir)
-        k = cells_for(n)
-        k1 = coarse_cells_for(k)
-        k2 = sub_cells_for(k)
-        step = km_sample_step(n)
-        v = quantized_embeddings(spark, sf_dir)
-        train = v
-
-        # -- level 1 (seeds from the pool; Lloyd over the corpus)
-        cents = v.filter(
-            (F.col("vec_id") % step == 0) & (F.col("vec_id") < k1 * step)
-        ).select(
-            (F.col("vec_id") / step).cast("int").alias("cell"), F.col("q").alias("cq")
-        )
-        for _ in range(iters):
-            cents = _lloyd_update(_assign_cells(train, cents), ["cell"])
-        coarse = cents.localCheckpoint()
-
-        # -- level 2: fixed group membership from the final coarse codebook
-        tr1 = _assign_cells(train, coarse).select(
-            "vec_id", F.col("cell").alias("c1"), "q"
-        )
-        w_seed = Window.partitionBy("c1").orderBy("vec_id")
-        sub = (
-            tr1.filter(F.col("vec_id") % step == 0)
-            .withColumn("sub", (F.row_number().over(w_seed) - 1).cast("int"))
-            .filter(F.col("sub") < k2)
-            .select("c1", "sub", F.col("q").alias("cq"))
-        )
-        # fallback sub-cell: the coarse centroid itself, as sub 0
-        coarse_fb = coarse.select(
-            F.col("cell").alias("c1"), F.lit(0).cast("int").alias("sub"), "cq"
-        )
-        for _ in range(iters):
-            # per-c1 sub-centroid arrays: the argmin then runs as a per-row
-            # expression after the c1 join — the corpus is not re-shuffled by
-            # vec_id (see _assign_cells); the join itself stays keyed on c1
-            # (k1 rows of arrays — AQE broadcasts while it fits)
-            sub_arr = sub.groupBy("c1").agg(
-                F.collect_list(
-                    F.struct(F.col("sub").alias("cell"), F.col("cq"))
-                ).alias("ss")
-            )
-            assigned = tr1.join(sub_arr, "c1").selectExpr(
-                "vec_id", "c1", "q", _argmin_expr("ss", "cell") + " AS sub"
-            )
-            upd = _lloyd_update(assigned, ["c1", "sub"])
-            missing = coarse_fb.join(
-                upd.select("c1").distinct(), "c1", "left_anti"
-            )
-            sub = upd.unionByName(missing)
-        sub = sub.localCheckpoint()
-        return coarse, sub, k2
-
-    return session_table(spark, sf_dir, ("codebook", iters), build)
-
-
-def _assign_two_level(
-    v: DataFrame, coarse: DataFrame, sub: DataFrame, k2: int
-) -> DataFrame:
-    """(vec_id, cell, q) — greedy two-level assignment: nearest coarse
-    centroid (broadcast k1 rows + map-side max_by, corpus never shuffles),
-    then nearest sub-centroid WITHIN that coarse cell (join on c1 — AQE
-    broadcasts the sub table while it fits, co-partitions beyond; either
-    way no k-row broadcast). Ties break to the smallest cell id at both
-    levels. Final cell id = c1 * k2 + sub."""
-    a1 = _assign_cells(v, coarse).select("vec_id", F.col("cell").alias("c1"), "q")
-    sub_arr = sub.groupBy("c1").agg(
-        F.collect_list(F.struct(F.col("sub").alias("cell"), F.col("cq"))).alias("ss")
-    )
-    return (
-        a1.join(sub_arr, "c1")
-        .selectExpr("vec_id", "c1", "q", _argmin_expr("ss", "cell") + " AS sub")
-        .select(
-            "vec_id",
-            (F.col("c1") * k2 + F.col("sub")).cast("int").alias("cell"),
-            "q",
-        )
-    )
+    coarse, sub, k2, _ = _train_ivf(spark, sf_dir, iters)
+    return coarse, sub, k2
 
 
 def ivf_assign(spark: SparkSession, sf_dir: str, iters: int = KM_ITERS) -> DataFrame:
     """(vec_id, cell, q) — corpus assigned to the TRAINED two-level
-    codebook; localCheckpoint-materialized and shared per session (a
-    session table), so ann_ivf / ann_ivf2 / ann_recall share one
+    codebook: nearest coarse centroid (broadcast k1 rows + per-row argmin,
+    the corpus never shuffles), then nearest sub-centroid WITHIN that coarse
+    cell (join on c1 — AQE broadcasts the sub arrays while they fit,
+    co-partitions beyond; either way no k-row broadcast). Ties break to the
+    smallest cell id at both levels; final cell id = c1 * k2 + sub.
+    localCheckpoint-materialized and shared per session with the training
+    (``_train_ivf``), so ann_ivf / ann_ivf2 / ann_recall share one
     assignment pass, as they share one training."""
-
-    def build() -> DataFrame:
-        v = quantized_embeddings(spark, sf_dir)
-        coarse, sub, k2 = kmeans_codebooks(spark, sf_dir, iters=iters)
-        return _assign_two_level(v, coarse, sub, k2).localCheckpoint()
-
-    return session_table(spark, sf_dir, ("assign", iters), build)
+    return _train_ivf(spark, sf_dir, iters)[3]
 
 
 def query_probe_cells(
@@ -603,10 +641,12 @@ def ann_ivf_topk(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    return (
-        dotted.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .orderBy("query_id", "rnk")
+    return sorted_small(
+        dotted.withColumn("rnk", F.row_number().over(w).cast("int")).filter(
+            F.col("rnk") <= k
+        ),
+        "query_id",
+        "rnk",
     )
 
 
@@ -639,10 +679,12 @@ def ann_ivf_nprobe2(
         # cells are disjoint per corpus vector, so no distinct needed
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    return (
-        dotted.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .orderBy("query_id", "rnk")
+    return sorted_small(
+        dotted.withColumn("rnk", F.row_number().over(w).cast("int")).filter(
+            F.col("rnk") <= k
+        ),
+        "query_id",
+        "rnk",
     )
 
 
@@ -657,15 +699,11 @@ def ann_recall(
     oracle hashes identically: (nprobe, n_hits, n_exact).
 
     The two-level codebook trains ONCE (session cache in
-    ``kmeans_codebooks``) and the corpus is assigned ONCE
-    (localCheckpoint); each nprobe level adds only a tiny query-side probe
+    ``kmeans_codebooks``), the corpus is assigned ONCE and the exact
+    baseline is ``ann_topk``'s session table; each nprobe level adds only a tiny query-side probe
     ranking + one broadcast join — never a corpus-wide window (r4 VERDICT
     "wrong" #2)."""
-    exact = (
-        _topk_unordered(spark, sf_dir, n_queries, k)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-    )
+    exact = _exact_topk(spark, sf_dir, n_queries, k).select("query_id", "neighbor_id")
     v = quantized_embeddings(spark, sf_dir)
     coarse, sub, k2 = kmeans_codebooks(spark, sf_dir, iters=iters)
     cells = ivf_assign(spark, sf_dir, iters=iters)
@@ -726,15 +764,19 @@ def ann_recall(
         .agg(F.count("*").alias("n_hits"))
     )
     # a level with zero hits must still emit its row (the per-level agg
-    # used to guarantee that); join the literal level list back in
-    level_rows = spark.createDataFrame([(int(l),) for l in levels], "nprobe int")
-    return (
+    # used to guarantee that); join the literal level list back in. The
+    # level list is an inline VALUES table planned in the JVM: a
+    # createDataFrame over Python rows would ship them through a Python
+    # worker stage.
+    values = ", ".join(f"({int(l)})" for l in levels)
+    level_rows = spark.sql(f"SELECT * FROM VALUES {values} AS t(nprobe)")
+    return sorted_small(
         level_rows.join(hits, level_rows.nprobe == hits.lv, "left")
         .select(
             "nprobe", F.coalesce("n_hits", F.lit(0).cast("long")).alias("n_hits")
         )
-        .crossJoin(exact.agg(F.count("*").alias("n_exact")))
-        .orderBy("nprobe")
+        .crossJoin(exact.agg(F.count("*").alias("n_exact"))),
+        "nprobe",
     )
 
 
@@ -759,7 +801,7 @@ def embed_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow projection before the self-join shuffle: this query verifies
     # with its own coarser quantization (QUANT_COS), so q is dead weight
     sig = simhash_band_sigs(spark, sf_dir).select("vec_id", "band", "sig")
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = input_table(spark, sf_dir, "embeddings")
     q = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * F.lit(QUANT_COS)).cast("long")
     )
@@ -790,15 +832,7 @@ def embed_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vb").alias("vec_id"))
         .distinct()
     )
-    base = e.select("vec_id", "label")
-    kept = base.join(drops, "vec_id", "left_anti")
-    total = base.groupBy("label").agg(F.count("*").alias("n_vecs"))
-    keptc = kept.groupBy("label").agg(F.count("*").alias("n_kept"))
-    return (
-        total.join(keptc, "label", "left")
-        .select("label", "n_vecs", F.coalesce("n_kept", F.lit(0)).alias("n_kept"))
-        .orderBy("label")
-    )
+    return kept_counts(e.select("vec_id", "label"), drops, "vec_id", "label", "n_vecs")
 
 
 # ---------------------------------------------------------------------------

@@ -31,24 +31,26 @@ md5/count/min integer arithmetic — bit-identical in DuckDB.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from gdelta_spark.pipeline.partitioning import spread_input
-from gdelta_spark.pipeline.session import session_table
+from gdelta_spark.pipeline.session import input_table, session_table, sorted_small
 
 SHINGLE = 5
 N_BANDS = 4
 
 def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, arr: array<string>, n) — each doc's DISTINCT shingle set as
-    one array row, materialized and shared per session. array_distinct is
-    per-row, so the set construction needs NO shuffle at all — the
-    exploded-distinct shape this replaces shuffled one row per (doc,
-    shingle) through a dedup exchange. The exploded view for the band-sig
-    aggregate is a map-side explode of this checkpoint."""
+    """(doc_id, arr: array<string>, n, sig0..sig3) — each doc's DISTINCT
+    shingle set as one array row plus its MinHash band signatures (see
+    ``_with_band_sigs``), materialized and shared per session. Both are
+    per-row expressions (array_distinct, per-row array_min), so the shingle
+    sets AND the LSH index come out of ONE map-only pass with no shuffle.
+    A group-by-doc min over exploded shingles would instead shuffle every
+    (doc, shingle) row, and at bench scale AQE coalesces that aggregate's
+    small final stage into a single task."""
 
     def build() -> DataFrame:
-        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        d = spread_input(input_table(spark, sf_dir, "documents"))
         w = d.select("doc_id", F.split("text", " ").alias("w")).filter(
             F.size("w") >= SHINGLE
         )
@@ -57,9 +59,9 @@ def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" i -> concat_ws(' ', slice(w, i, {SHINGLE}))))"
         )
         a = w.select("doc_id", grams.alias("arr"))
-        return a.select(
-            "doc_id", "arr", F.size("arr").cast("long").alias("n")
-        ).localCheckpoint()
+        return _with_band_sigs(
+            a.select("doc_id", "arr", F.size("arr").cast("long").alias("n"))
+        ).localCheckpoint(eager=False)
 
     return session_table(spark, sf_dir, "shingle_arrays", build)
 
@@ -72,21 +74,20 @@ def _shingles_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bands_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band, sig) — the MinHash band-signature table (the LSH index
-    over shingles), shared per session: neardup_pairs / neardup_keep /
-    neardup_components consume it on both sides of the candidate self-join."""
+    over shingles), shared per session: the candidate self-join of
+    ``_verified_pairs`` consumes it on both sides. A projection of the
+    materialized shingle table, so it pins nothing of its own."""
     return session_table(
-        spark,
-        sf_dir,
-        "minhash_bands",
-        lambda: _band_sigs(_shingles_checkpointed(spark, sf_dir)).localCheckpoint(),
+        spark, sf_dir, "minhash_bands",
+        lambda: _stack_bands(_doc_shingle_arrays(spark, sf_dir)),
     )
 
 
-def _band_sigs(shingles: DataFrame) -> DataFrame:
-    """(doc_id, band, sig) — per-band MinHash signature (b=N_BANDS bands x
-    r=2 rows), exploded so the band signature is a join key (LSH bucket).
+def _with_band_sigs(arrays: DataFrame) -> DataFrame:
+    """``arrays`` (doc_id, arr: distinct shingles, ...) plus sig0..sig3 —
+    per-band MinHash signatures (b=N_BANDS bands x r=2 rows).
 
     The 2*N_BANDS permutations derive from TWO md5s per shingle (the digest
     and a salted digest); band b's signature concatenates the mins of its
@@ -95,36 +96,33 @@ def _band_sigs(shingles: DataFrame) -> DataFrame:
     at ~15% instead of r=1's ~59% while J>=0.8 true pairs still bucket at
     >=99% — the exact-Jaccard verify then keeps precision exact either way,
     but candidate COUNT is the cost driver on a 10^12-doc corpus. (The
-    round-1 r=1 banding was flagged for exactly this.) Two md5s over the
-    exploded shingle set remain the dominant cost of the dedup family."""
-    # min over 8-hex-char slices == min over their numeric value (fixed
-    # length, lowercase hex is ASCII-ordered), so aggregate LONGS and
-    # reformat: min(string) has no mutable fixed-width buffer and forces a
-    # SortAggregate (sort the whole shingle table per side), while
-    # min(long) is a plain HashAggregate with map-side combine — and the
-    # partial-agg shuffle carries 8 longs instead of 8 strings.
-    h = F.md5("shingle")
-    h2 = F.md5(F.concat("shingle", F.lit("~")))
-    both = shingles.select(
-        "doc_id",
-        *[
-            F.conv(F.substring(h, 8 * b + 1, 8), 16, 10).cast("long").alias(f"vp{b}")
-            for b in range(N_BANDS)
-        ],
-        *[
-            F.conv(F.substring(h2, 8 * b + 1, 8), 16, 10).cast("long").alias(f"vq{b}")
-            for b in range(N_BANDS)
-        ],
+    round-1 r=1 banding was flagged for exactly this.) Two md5s per shingle
+    remain the dominant cost of the dedup family.
+
+    The mins are taken per row over the doc's own array, so no shuffle is
+    needed; each md5 is computed once per shingle (the digest arrays are
+    their own projection, which the optimizer does not inline into the
+    2*N_BANDS consumers because array transforms are not cheap)."""
+    digests = arrays.select(
+        "*",
+        F.expr("transform(arr, s -> md5(s))").alias("_hp"),
+        F.expr("transform(arr, s -> md5(concat(s, '~')))").alias("_hq"),
     )
-    sigs = both.groupBy("doc_id").agg(
-        *[F.min(f"vp{b}").alias(f"mp{b}") for b in range(N_BANDS)],
-        *[F.min(f"vq{b}").alias(f"mq{b}") for b in range(N_BANDS)],
-    )
-    fmt = "lower(lpad(hex(mp{b}), 8, '0')) || lower(lpad(hex(mq{b}), 8, '0'))"
-    stack = ", ".join(f"'{b}', " + fmt.format(b=b) for b in range(N_BANDS))
-    return sigs.select(
-        "doc_id", F.expr(f"stack({N_BANDS}, {stack}) AS (band, sig)")
-    )
+    piece = "array_min(transform({h}, x -> substring(x, {lo}, 8)))"
+    sigs = [
+        F.expr(
+            piece.format(h="_hp", lo=8 * b + 1) + " || " + piece.format(h="_hq", lo=8 * b + 1)
+        ).alias(f"sig{b}")
+        for b in range(N_BANDS)
+    ]
+    return digests.select(*arrays.columns, *sigs)
+
+
+def _stack_bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, sig) — one row per (doc, band), so the band signature
+    is a join key (LSH bucket)."""
+    stack = ", ".join(f"'{b}', sig{b}" for b in range(N_BANDS))
+    return sigs.select("doc_id", F.expr(f"stack({N_BANDS}, {stack}) AS (band, sig)"))
 
 
 def _pairs_from_bands(bands: DataFrame) -> DataFrame:
@@ -142,9 +140,11 @@ def _pairs_from_bands(bands: DataFrame) -> DataFrame:
     )
 
 
-def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verified near-duplicate pairs: (doc_a, doc_b, n_inter, n_union) with
-    shingle-Jaccard >= 0.5 (exact integer test).
+def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_union) — candidate pairs with
+    shingle-Jaccard >= 0.5 (exact integer test), materialized and shared per
+    session: ``neardup_pairs`` presents them, ``neardup_keep`` and
+    ``neardup_components`` build on them without re-running the verify.
 
     The verify attaches each candidate doc's distinct-shingle ARRAY and
     counts the intersection per row (array_intersect): work is
@@ -153,47 +153,65 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a pair-keyed aggregate. A pair with an empty intersection
     yields n_inter = 0 and fails the Jaccard filter exactly as it
     (vacuously) did when the inner-join dropped it."""
-    arrs = _doc_shingle_arrays(spark, sf_dir)
-    cand = _pairs_from_bands(_bands_checkpointed(spark, sf_dir))
-    pa = arrs.select(
-        F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"),
-        F.col("n").alias("na"),
-    )
-    pb = arrs.select(
-        F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"),
-        F.col("n").alias("nb"),
-    )
-    return (
-        cand.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("arr_a", "arr_b")).cast("long").alias("n_inter"),
-            (F.col("na") + F.col("nb")).alias("nsum"),
+
+    def build() -> DataFrame:
+        arrs = _doc_shingle_arrays(spark, sf_dir)
+        cand = _pairs_from_bands(_minhash_bands(spark, sf_dir))
+        pa = arrs.select(
+            F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"),
+            F.col("n").alias("na"),
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            (F.col("nsum") - F.col("n_inter")).alias("n_union"),
+        pb = arrs.select(
+            F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"),
+            F.col("n").alias("nb"),
         )
-        .filter(F.col("n_inter") * 2 >= F.col("n_union"))
-        .orderBy("doc_a", "doc_b")
+        return (
+            cand.join(pa, "doc_a")
+            .join(pb, "doc_b")
+            .select(
+                "doc_a",
+                "doc_b",
+                F.size(F.array_intersect("arr_a", "arr_b")).cast("long").alias("n_inter"),
+                (F.col("na") + F.col("nb")).alias("nsum"),
+            )
+            .select(
+                "doc_a",
+                "doc_b",
+                "n_inter",
+                (F.col("nsum") - F.col("n_inter")).alias("n_union"),
+            )
+            .filter(F.col("n_inter") * 2 >= F.col("n_union"))
+            .localCheckpoint(eager=False)
+        )
+
+    return session_table(spark, sf_dir, "neardup_verified", build)
+
+
+def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verified near-duplicate pairs: (doc_a, doc_b, n_inter, n_union) with
+    shingle-Jaccard >= 0.5, ordered by (doc_a, doc_b)."""
+    return _verified_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def kept_counts(base: DataFrame, drops: DataFrame, key: str, group: str, total: str) -> DataFrame:
+    """(group, total, n_kept) — per ``group`` value, the rows of ``base`` and
+    how many survive once the ``key`` values in ``drops`` (distinct) are
+    removed. One left join against the small drop list and one aggregate."""
+    flagged = base.join(drops.select(key, F.lit(1).alias("_drop")), key, "left")
+    return sorted_small(
+        flagged.groupBy(group).agg(
+            F.count("*").alias(total),
+            F.count(F.when(F.col("_drop").isNull(), 1)).alias("n_kept"),
+        ),
+        group,
     )
 
 
 def neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source survivorship after dropping doc_b of every verified pair."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    drops = neardup_pairs(spark, sf_dir).select(F.col("doc_b").alias("doc_id")).distinct()
-    kept = d.join(drops, "doc_id", "left_anti")
-    total = d.groupBy("source").agg(F.count("*").alias("n_docs"))
-    keptc = kept.groupBy("source").agg(F.count("*").alias("n_kept"))
-    return (
-        total.join(keptc, "source", "left")
-        .select("source", "n_docs", F.coalesce("n_kept", F.lit(0)).alias("n_kept"))
-        .orderBy("source")
+    drops = _verified_pairs(spark, sf_dir).select(F.col("doc_b").alias("doc_id")).distinct()
+    return kept_counts(
+        input_table(spark, sf_dir, "documents"), drops, "doc_id", "source", "n_docs"
     )
 
 
@@ -211,8 +229,9 @@ def min_label_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     near-clique components (the near-dup case) still finish in the same
     3-4 rounds with no extra join. Each round is one shuffle join + one
     min-aggregate (+ one label self-join once shortcutting starts);
-    ``localCheckpoint`` truncates lineage; the driver moves only a single
-    change-count per round, never data.
+    ``localCheckpoint`` truncates lineage, and the round's change count is
+    observed during that same materializing pass — the driver moves a
+    single metric per round, never data, and launches no extra job for it.
 
     Correctness invariant: label(v) is always the id of some vertex in v's
     component and only decreases; min over neighbors and label-of-label
@@ -222,38 +241,44 @@ def min_label_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     # has a self row in labels and old_label below is never null
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
+    ).localCheckpoint(eager=False)
+    # round 0 needs no label table: every vertex is its own label, so the
+    # messages are the neighbor ids themselves
+    prop = (
+        edges.groupBy(F.col("doc_b").alias("doc_id"))
+        .agg(F.min("doc_a").alias("msg"))
+        .select(
+            "doc_id",
+            F.col("doc_id").alias("old_label"),
+            F.least("doc_id", "msg").alias("label"),
+        )
     )
     for it in range(max_iters):
-        # one aggregate does both the neighbor-min fold and the old-label
-        # carry: neighbor messages union the self row (own = label), so
-        # min(msg) is the propagated label and max(own) recovers the old
-        # one — this replaces a groupBy PLUS a join back onto labels with
-        # a single shuffle per round
-        msgs = edges.join(labels, edges.doc_a == labels.doc_id).select(
-            F.col("doc_b").alias("doc_id"),
-            F.col("label").alias("msg"),
-            # NULL of the label's own type (ids may be strings or ints —
-            # the function is generic over the vertex id type)
-            F.when(F.lit(False), F.col("label")).alias("own"),
-        )
-        selfm = labels.select(
-            "doc_id", F.col("label").alias("msg"), F.col("label").alias("own")
-        )
-        prop = (
-            msgs.unionByName(selfm)
-            .groupBy("doc_id")
-            .agg(
-                F.min("msg").alias("label"),
-                F.max("own").alias("old_label"),
+        if it > 0:
+            # one aggregate does both the neighbor-min fold and the old-label
+            # carry: neighbor messages union the self row (own = label), so
+            # min(msg) is the propagated label and max(own) recovers the old
+            # one — this replaces a groupBy PLUS a join back onto labels with
+            # a single shuffle per round
+            msgs = edges.join(labels, edges.doc_a == labels.doc_id).select(
+                F.col("doc_b").alias("doc_id"),
+                F.col("label").alias("msg"),
+                # NULL of the label's own type (ids may be strings or ints —
+                # the function is generic over the vertex id type)
+                F.when(F.lit(False), F.col("label")).alias("own"),
             )
-            .select("doc_id", "old_label", "label")
-        )
+            selfm = labels.select(
+                "doc_id", F.col("label").alias("msg"), F.col("label").alias("own")
+            )
+            prop = (
+                msgs.unionByName(selfm)
+                .groupBy("doc_id")
+                .agg(
+                    F.min("msg").alias("label"),
+                    F.max("own").alias("old_label"),
+                )
+                .select("doc_id", "old_label", "label")
+            )
         if it >= 2:
             # pointer doubling against the PREVIOUS round's (checkpointed)
             # labels: label(label(v)) <= label(v) since labels only decrease
@@ -265,12 +290,15 @@ def min_label_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
                 "old_label",
                 F.least("label", F.coalesce("l_lab", F.col("label"))).alias("label"),
             )
-        new_labels = prop.withColumn(
-            "changed", (F.col("label") != F.col("old_label")).cast("int")
-        ).localCheckpoint()
-        n_changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
-        labels = new_labels.select("doc_id", "label")
-        if n_changed == 0:
+        changed = Observation()
+        labels = (
+            prop.observe(
+                changed, F.count(F.when(F.col("label") != F.col("old_label"), 1)).alias("n")
+            )
+            .select("doc_id", "label")
+            .localCheckpoint()
+        )
+        if changed.get["n"] == 0:
             return labels
     raise RuntimeError(f"label propagation did not converge in {max_iters} rounds")
 
@@ -294,23 +322,17 @@ def neardup_components(spark: SparkSession, sf_dir: str, max_iters: int = 50) ->
 
     Output matches ``neardup_keep``'s shape (source, n_docs, n_kept) so the
     two survivorship policies are directly comparable."""
-    pairs = neardup_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = min_label_components(pairs, max_iters=max_iters)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     drops = labels.filter(F.col("label") < F.col("doc_id")).select("doc_id")
-    kept = d.join(drops, "doc_id", "left_anti")
-    total = d.groupBy("source").agg(F.count("*").alias("n_docs"))
-    keptc = kept.groupBy("source").agg(F.count("*").alias("n_kept"))
-    return (
-        total.join(keptc, "source", "left")
-        .select("source", "n_docs", F.coalesce("n_kept", F.lit(0)).alias("n_kept"))
-        .orderBy("source")
+    return kept_counts(
+        input_table(spark, sf_dir, "documents"), drops, "doc_id", "source", "n_docs"
     )
 
 
 def dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-dedup materialization: surviving doc_id per distinct text."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     return (
         d.groupBy(F.md5("text").alias("fp"))
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_cnt"))
@@ -321,7 +343,7 @@ def dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document-fingerprint cardinality (1-hash MinHash)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "source")
+    d = input_table(spark, sf_dir, "documents").select("doc_id", "source")
     fps = (
         _shingles_checkpointed(spark, sf_dir)
         .groupBy("doc_id")
@@ -449,7 +471,7 @@ def simhash_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     same md5-derived ±1 trick as the ANN hyperplanes (ops/ann.py), so a
     SQL oracle reproduces it exactly.
     """
-    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    d = spread_input(input_table(spark, sf_dir, "documents"))
     # materialize md5 ONCE per word in its own projection: common-subexpression
     # elimination does not span the 16 aggregate expressions, so inlining
     # F.md5 into each bit's F.when would hash every word 16 times (explode must

@@ -35,6 +35,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gdelta_spark.pipeline.session import input_table
+
 PAYLOAD_SCHEMA = "item_id long, modality string, payload binary, n_bytes long"
 FEATURE_SCHEMA = "item_id long, n_bytes long, n_space long, n_digit long, n_upper long"
 
@@ -152,7 +154,7 @@ def documents_as_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic multimodal stand-in: each document's utf-8 bytes as an
     opaque payload with typed metadata. encode(text) is bit-deterministic,
     so oracle engines can reproduce every byte-level statistic from text."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     return d.select(
         F.col("doc_id").alias("item_id"),
         F.lit("text/plain").alias("modality"),
@@ -298,7 +300,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum aggregate. Oracle-checkable: the payload is the (ASCII)
     document text, so DuckDB replays the same index selection with
     substr/ascii and the same md5 over the resampled string."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = input_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("item_id"), "source"
     )
     rz = resize_payload(documents_as_binary(spark, sf_dir))
@@ -318,7 +320,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source byte-class feature rollup through the FULL binary path:
     documents -> binary payload -> mapInPandas featurizer -> aggregate."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = input_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("item_id"), "source"
     )
     feats = payload_features(documents_as_binary(spark, sf_dir))
@@ -342,7 +344,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint aggregate. Oracle-checkable because the payload is the utf-8
     document text (ASCII in the synthetic corpus), so DuckDB reproduces each
     frame as a substr slice and md5-fingerprints the same bytes."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = input_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("item_id"), "source"
     )
     frames = sample_frames(documents_as_binary(spark, sf_dir))
@@ -453,7 +455,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-item statistics of DECODED media: position-weighted channel sums
     of the BMP pixels and weighted sum / min / max of the WAV samples."""
     d = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        input_table(spark, sf_dir, "documents")
         .select(F.col("doc_id").cast("long").alias("item_id"))
         .filter(F.col("item_id") < N_DECODE_ITEMS)
     )

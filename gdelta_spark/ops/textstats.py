@@ -19,11 +19,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from gdelta_spark.pipeline.session import input_table, sorted_small
+
 LANGS = ("de", "en", "es", "fr", "ja")  # sorted: tie-break is lang asc
 
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     ws = F.size(F.split("text", " "))
     rx = F.size(F.expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
     return (
@@ -47,7 +49,7 @@ FROM documents GROUP BY source ORDER BY source
 
 def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, predicted, n_docs) — actual label vs hash-marker prediction."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = input_table(spark, sf_dir, "documents")
     words = d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("word"))
     # word -> one of len(LANGS) marker classes via md5 first-hex-digit
     vote_ix = (
@@ -112,28 +114,25 @@ def quality_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace tokens, stopword-list hits, short tokens (len <= 3), and the
     summed per-doc distinct-word counts (lexical-diversity numerator).
 
-    Shapes: three of the four are per-row expressions folded by one hash
-    aggregate; n_distinct needs a (doc_id, word) distinct first — an
-    explode + two map-side-combined aggregations, no joins, no windows."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    Shape: every count is a per-row expression over the doc's word array
+    (n_distinct is ``size(array_distinct(words))``, the doc's own distinct
+    count since doc_id is the documents key), folded by ONE map-side
+    combined hash aggregate — no explode, no second aggregation, no join."""
+    d = input_table(spark, sf_dir, "documents")
     words = F.split("text", " ")
     stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
     n_stop = F.expr(f"size(filter(split(text, ' '), w -> w IN ({stop_list})))")
     n_short = F.expr(f"size(filter(split(text, ' '), w -> length(w) <= {_SHORT_LEN}))")
-    base = d.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.size(words).cast("long")).alias("n_tokens"),
-        F.sum(n_stop.cast("long")).alias("n_stop"),
-        F.sum(n_short.cast("long")).alias("n_short"),
+    return sorted_small(
+        d.groupBy("source").agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size(words).cast("long")).alias("n_tokens"),
+            F.sum(n_stop.cast("long")).alias("n_stop"),
+            F.sum(n_short.cast("long")).alias("n_short"),
+            F.sum(F.size(F.array_distinct(words)).cast("long")).alias("n_distinct"),
+        ),
+        "source",
     )
-    per_doc = (
-        d.select("source", "doc_id", F.explode(words).alias("word"))
-        .groupBy("source", "doc_id")
-        .agg(F.countDistinct("word").alias("nd"))
-        .groupBy("source")
-        .agg(F.sum("nd").alias("n_distinct"))
-    )
-    return base.join(per_doc, "source").orderBy("source")
 
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import os
 from typing import Callable, Hashable, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
 
@@ -91,3 +91,27 @@ def session_table(
     if kind not in tables:
         tables[kind] = build()
     return tables[kind]
+
+
+def input_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The parquet input table ``name`` (documents, embeddings, events) of
+    corpus ``sf_dir``, read once per session. Every ``spark.read.parquet``
+    launches a schema-inference job, even for one file; the shared reader
+    pays it once per table. The value is a lazy DataFrame and pins nothing."""
+    return session_table(
+        spark, sf_dir, ("input", name),
+        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+    )
+
+
+def sorted_small(df: DataFrame, *cols) -> DataFrame:
+    """``df`` sorted by ``cols`` in ONE partition.
+
+    The bound rule: only for results whose row count is bounded by a group
+    cardinality (source, bucket, codec, label, nprobe) or by a top-k per
+    query (``n_queries * k``), never for corpus-sized outputs such as pair
+    lists, per-document reports or per-bucket winners. ``orderBy``
+    range-partitions, which costs a sampling job plus an exchange; a bounded
+    result sorts in one task instead. With ``cols`` a key of ``df``, rows
+    and row order are those of ``df.orderBy(*cols)``."""
+    return df.coalesce(1).sortWithinPartitions(*cols)

@@ -41,9 +41,7 @@ def build_index(spark: SparkSession, sf_dir: str, index_dir: str) -> dict:
     sub.withColumn("k2", F.lit(k2)).write.mode("overwrite").parquet(
         f"{index_dir}/sub.parquet"
     )
-    cells = ann._assign_two_level(
-        ann.quantized_embeddings(spark, sf_dir), coarse, sub, k2
-    )
+    cells = ann.ivf_assign(spark, sf_dir)
     cells.write.mode("overwrite").parquet(f"{index_dir}/cells.parquet")
     sizes = (
         spark.read.parquet(f"{index_dir}/cells.parquet")

@@ -4,7 +4,8 @@ the straightforward formulation it replaced.
 
 - `_argmin_expr` (per-row array argmin) vs the old corpus-shuffling
   max_by aggregate, including order-insensitivity and tie-breaks.
-- `_band_sigs` numeric-min + hex reformat vs direct min-of-substring.
+- `_with_band_sigs` per-row array min vs the exploded min-of-substring
+  aggregate.
 - chooser incompressible shortlist (fsst skipped) vs measuring fsst.
 - `min_label_components` single-aggregate message round on string ids.
 """
@@ -72,7 +73,8 @@ def test_band_sigs_numeric_min_equals_string_min(spark):
         for _ in range(rng.randint(3, 9))
     ]
     sh = spark.createDataFrame(rows, "doc_id long, shingle string").distinct()
-    got = dedup._band_sigs(sh).collect()
+    arrays = sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("arr"))
+    got = dedup._stack_bands(dedup._with_band_sigs(arrays)).collect()
     # reference: the pre-round-6 direct min-of-substring formulation
     h1 = F.md5("shingle")
     h2 = F.md5(F.concat("shingle", F.lit("~")))

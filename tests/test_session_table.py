@@ -88,4 +88,4 @@ def test_corpus_tables_are_shared_across_calls(spark):
     from gdelta_spark.ops import ann, dedup
 
     assert ann.ivf_assign(spark, SF) is ann.ivf_assign(spark, SF)
-    assert dedup._bands_checkpointed(spark, SF) is dedup._bands_checkpointed(spark, SF)
+    assert dedup._minhash_bands(spark, SF) is dedup._minhash_bands(spark, SF)
