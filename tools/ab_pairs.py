@@ -58,7 +58,8 @@ def run_once(checkout: Path, workload: str, seed: int, seconds: float, trace: in
             info = obj["info"]
     if result is None:
         result = {"correct": False, "error": f"exit {proc.returncode}: {proc.stderr[-2000:]}"}
-    return {"result": result, "pinned_storage_mb": info.get("pinned_storage_mb")}
+    return {"result": result,
+            "pinned_storage_mb": info.get("named", {}).get("pinned_storage_mb")}
 
 
 def _iqr(xs: list[float]) -> float:
