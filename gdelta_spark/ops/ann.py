@@ -457,8 +457,9 @@ def _train_ivf(
     level-2 seed window, every level-2 Lloyd round and the final two-level
     assignment all read it. The argmin runs interpreted (see the module
     docstring), so each avoided corpus pass is real executor time. ``tr1``
-    is cached only for the build and released at its end; what stays pinned
-    is the two codebooks and the final assignment, as before."""
+    is a lazy localCheckpoint that only this build references: once the
+    final assignment is materialized nothing reads it, and Spark's context
+    cleaner reclaims its blocks like any unreferenced checkpoint."""
 
     def build() -> "tuple[DataFrame, DataFrame, int, DataFrame]":
         n = n_vectors(spark, sf_dir)
