@@ -15,7 +15,8 @@ SF = str(Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.00
 # Spark jobs per query on the vendored sf0.001 tables, run in bench.py's
 # HEADLINE order in one fresh session (local[4], 8 shuffle partitions). The
 # counts include the builds of the session tables each query is first to
-# need. The roundtrip and streaming queries are left out: they write files.
+# need. Left out: the two roundtrip queries (the slowest of the pass, run
+# through the Python encode kernel) and the streaming query (writes files).
 JOB_BUDGET = {
     "compression_summary": 6,
     "tokenize_stats": 2,
