@@ -309,33 +309,30 @@ def _ref_size_ratio(corpus: str, n_pairs: int = 24) -> float | None:
                  "/root/reference/gdelta.cpp", "-I/root/reference"],
                 check=True, capture_output=True,
             )
-        except Exception:
+        except (OSError, subprocess.CalledProcessError):
             return None
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        from gdelta_spark.codecs.gdelta_codec import gdelta_encode
+    from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
 
-        tbl = pq.read_table(corpus, columns=["doc_id", "tokens", "source"])
-        mask = [s == "near-dup" for s in tbl.column("source").to_pylist()]
-        idx = [i for i, m in enumerate(mask) if m][: n_pairs + 1]
-        if len(idx) < 2:
-            return None
-        rows = [tbl.column("tokens")[i].values.to_numpy().astype("<i4").tobytes() for i in idx]
-        base, targets = rows[0], rows[1:]
-        ours = ref_total = 0
-        with tempfile.TemporaryDirectory() as d:
-            bp = f"{d}/base"
-            open(bp, "wb").write(base)
-            for t in targets:
-                ours += len(gdelta_encode(t, base))
-                tp, dp = f"{d}/t", f"{d}/d"
-                open(tp, "wb").write(t)
-                subprocess.run([str(ref), "-e", "-o", dp, bp, tp], check=True)
-                ref_total += os.path.getsize(dp)
-        return ours / ref_total if ref_total else None
-    except Exception:
+    tbl = pq.read_table(corpus, columns=["doc_id", "tokens", "source"])
+    mask = [s == "near-dup" for s in tbl.column("source").to_pylist()]
+    idx = [i for i, m in enumerate(mask) if m][: n_pairs + 1]
+    if len(idx) < 2:
         return None
+    rows = [tbl.column("tokens")[i].values.to_numpy().astype("<i4").tobytes() for i in idx]
+    base, targets = rows[0], rows[1:]
+    ours = sum(len(b) for b in gdelta_encode_group(targets, base))
+    ref_total = 0
+    with tempfile.TemporaryDirectory() as d:
+        bp = f"{d}/base"
+        open(bp, "wb").write(base)
+        for t in targets:
+            tp, dp = f"{d}/t", f"{d}/d"
+            open(tp, "wb").write(t)
+            subprocess.run([str(ref), "-e", "-o", dp, bp, tp], check=True)
+            ref_total += os.path.getsize(dp)
+    return ours / ref_total if ref_total else None
 
 
 def _membw_probe() -> float:

@@ -51,14 +51,12 @@ def probe_similarity(sample_rows: list[np.ndarray], base: bytes | None) -> float
     in any aligned prefix. Cheap enough to run per similarity cluster."""
     if base is None or not sample_rows:
         return 1.0
-    from gdelta_spark.codecs.gdelta_codec import gdelta_encode
+    from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
 
-    probe_base = base[: 4 * PROBE_TOKENS]
-    raw = enc = 0
-    for row in sample_rows[:3]:
-        rb = tokens_to_bytes(row[:PROBE_TOKENS])
-        raw += len(rb)
-        enc += _backstopped(gdelta_encode(rb, probe_base))
+    rows = [tokens_to_bytes(row[:PROBE_TOKENS]) for row in sample_rows[:3]]
+    raw = sum(len(rb) for rb in rows)
+    blobs = gdelta_encode_group(rows, base[: 4 * PROBE_TOKENS])
+    enc = sum(_backstopped(b) for b in blobs)
     return enc / raw if raw else 1.0
 
 

@@ -7,7 +7,8 @@ from __future__ import annotations
 import numpy as np
 
 from gdelta_spark.codecs import core
-from gdelta_spark.codecs.gdelta_codec import gdelta_decode, gdelta_encode
+from gdelta_spark.codecs.gdelta_codec import gdelta_decode, gdelta_decode_batch
+from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
 
 
 def tokens_to_bytes(values: np.ndarray) -> bytes:
@@ -21,7 +22,7 @@ def bytes_to_tokens(buf: bytes) -> np.ndarray:
 def gdelta_block_encode(values: np.ndarray, base: bytes) -> bytes:
     if base is None:
         raise ValueError("gdelta block codec requires a base chunk")
-    return gdelta_encode(tokens_to_bytes(values), base)
+    return gdelta_encode_group([tokens_to_bytes(values)], base)[0]
 
 
 def gdelta_block_decode(payload: bytes, base: bytes) -> np.ndarray:
@@ -51,42 +52,21 @@ def gdelta_rows_payload(
 
     if base is None:
         raise ValueError("gdelta block codec requires a base chunk")
-    from gdelta_spark.codecs.gdelta_codec import BaseIndex
-    from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
-
     if rows_bytes is None:
         rows_bytes = [tokens_to_bytes(a) for a in arrays]
-    if len(rows_bytes) > 1:
-        # lockstep batched group encoder: byte-identical blobs, amortizes
-        # per-probe fixed numpy dispatch across all rows of the group
-        blobs = gdelta_encode_group(rows_bytes, base, BaseIndex(base))
-    else:
-        blobs = [gdelta_encode(rb, base) for rb in rows_bytes]
+    blobs = gdelta_encode_group(rows_bytes, base)
     lens = np.array([len(b) for b in blobs], dtype=np.int64)
     return struct.pack("<I", len(blobs)) + _pack_for(lens) + b"".join(blobs)
 
 
 def gdelta_rows_decode(payload: bytes, base: bytes) -> list[np.ndarray]:
-    import struct
-
-    from gdelta_spark.codecs.gdelta_codec import gdelta_decode_batch
     from gdelta_spark.codecs.light import _unpack_for
 
     if base is None:
         raise ValueError("gdelta block codec requires a base chunk")
-    (n_rows,) = struct.unpack_from("<I", payload, 0)
     lens, pos = _unpack_for(payload, 4)
-    if n_rows >= 8:
-        # one vectorized parse + assembly across the whole block: the row
-        # deltas are contiguous in the payload, which is exactly the batch
-        # decoder's input shape
-        spans = []
-        for ln in lens.tolist():
-            spans.append((pos, ln))
-            pos += ln
-        return [bytes_to_tokens(b) for b in gdelta_decode_batch(payload, spans, base)]
-    out = []
+    spans = []
     for ln in lens.tolist():
-        out.append(bytes_to_tokens(gdelta_decode(payload[pos : pos + ln], base)))
+        spans.append((pos, ln))
         pos += ln
-    return out
+    return [bytes_to_tokens(b) for b in gdelta_decode_batch(payload, spans, base)]

@@ -1,11 +1,13 @@
 """Gdelta delta codec — vectorized, byte-exact re-implementation.
 
 Produces/consumes the same blob format as the reference C++ codec
-(apple-ouyang/gdelta) so blobs are cross-decodable, while the encoder is
-re-architected for numpy vectorization: Gear fingerprints for *all*
-positions are computed as one fixed-weight sliding sum, candidate
-verification is a bulk 16-byte window compare, and the greedy resolution
-loop iterates per *match* (not per byte).
+(apple-ouyang/gdelta) so blobs are cross-decodable. This module holds the
+blob format, the decoder and the per-base index (``BaseIndex``) the encoder
+shares across a group's rows; the encoder itself is
+``gdelta_group.gdelta_encode_group``. It is re-architected for numpy
+vectorization: Gear fingerprints for *all* positions are computed as one
+fixed-weight sliding sum, candidate verification is a bulk 16-byte window
+compare, and the greedy resolution loop iterates per *match* (not per byte).
 
 Blob format (reverse-engineered; all citations into /root/reference/):
 
@@ -38,6 +40,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from gdelta_spark.codecs.core import CorruptBlockError
 from gdelta_spark.gear import GEAR
 
 STRLOOK = 16  # fingerprint window (gdelta.cpp:17)
@@ -246,136 +249,109 @@ def _parse_stream(
     )
 
 
-def parse_units(delta: bytes) -> tuple[list[tuple[int, int, int]], int]:
-    """Parse a delta blob into [(flag, length, offset)...] and the literal
-    data stream offset. Zero-length phantom units are kept (they are no-ops).
-    """
-    flags, lengths, offsets, inst_end = parse_units_arrays(delta)
-    return list(zip(flags.tolist(), lengths.tolist(), offsets.tolist())), inst_end
-
-
 # ---------------------------------------------------------------------------
 # decode
 # ---------------------------------------------------------------------------
 
 
-def _gdelta_decode_scalar(delta: bytes, pos: int, inst_end: int, base: bytes) -> bytes:
+def _row_header(payload, st: int, ln: int) -> tuple[int, int]:
+    """(instruction stream start, stream length) of the row delta stored at
+    ``payload[st:st+ln]``. A header or stream that runs past the row's span,
+    or a span that runs past the payload, is a ``CorruptBlockError``."""
+    if st + ln > len(payload):
+        raise CorruptBlockError("gdelta row runs past its payload")
+    try:
+        il, pos = read_varint(payload, st)
+    except IndexError:
+        raise CorruptBlockError("gdelta row header runs past its payload") from None
+    if pos + il > st + ln:
+        raise CorruptBlockError("gdelta instruction stream runs past its row")
+    return pos, il
+
+
+def _decode_row(payload, pos: int, inst_end: int, end: int, base: bytes) -> bytes:
+    """Per-unit decode of one row delta: instruction stream
+    ``payload[pos:inst_end]``, literal bytes from ``inst_end`` up to ``end``
+    (mirrors gdelta.cpp:533-567); assembly is slice-level memcpy. A copy
+    past ``base``, or a unit or literal past the row, is a
+    ``CorruptBlockError``."""
     parts = []
     data_pos = inst_end
-    while pos < inst_end:
-        flag, length, offset, pos = read_unit(delta, pos)
-        if length == 0:
-            continue
-        if flag:
-            parts.append(base[offset : offset + length])
-        else:
-            parts.append(delta[data_pos : data_pos + length])
-            data_pos += length
+    nb = len(base)
+    try:
+        while pos < inst_end:
+            flag, length, offset, pos = read_unit(payload, pos)
+            if length == 0:
+                continue
+            if flag:
+                if offset + length > nb:
+                    raise CorruptBlockError("gdelta copy unit reads past its base")
+                parts.append(base[offset : offset + length])
+            else:
+                parts.append(payload[data_pos : data_pos + length])
+                data_pos += length
+    except IndexError:
+        raise CorruptBlockError("gdelta unit runs past its payload") from None
+    if pos != inst_end or data_pos > end:
+        raise CorruptBlockError("gdelta unit or literal runs past its row")
     return b"".join(parts)
 
 
 def gdelta_decode(delta: bytes, base: bytes) -> bytes:
-    """Interpret a delta blob against ``base``; returns the reconstructed
-    target bytes (mirrors gdelta.cpp:533-567 semantics). Unit parsing is
-    batched to numpy above the scalar/vector crossover; assembly is
-    slice-level memcpy (never per byte)."""
-    inst_len, pos = read_varint(delta, 0)
-    if inst_len < _VEC_MIN_INST:
-        return _gdelta_decode_scalar(delta, pos, pos + inst_len, base)
-    flags, lengths, offsets, data_pos = parse_units_arrays(delta)
-    keep = lengths > 0
-    if not keep.all():
-        flags, lengths, offsets = flags[keep], lengths[keep], offsets[keep]
-    # literal units consume the data stream in order: prefix-sum their spans
-    ins = flags == 0
-    ins_start = np.full(lengths.size, 0, np.int64)
-    if ins.any():
-        ins_lens = lengths[ins]
-        starts = np.empty(ins_lens.size, np.int64)
-        starts[0] = data_pos
-        np.cumsum(ins_lens[:-1], out=starts[1:])
-        starts[1:] += data_pos
-        ins_start[ins] = starts
-    n_out = int(lengths.sum())
-    if lengths.size >= 64 and n_out < 128 * lengths.size:
-        # short-unit streams (literal-heavy deltas): per-unit Python slicing
-        # costs ~80ns/unit while units average <128 B — assemble instead via
-        # one gather over a combined (base ++ delta) address space, with the
-        # per-position source index built by the jump-cumsum trick (all O(N)
-        # array passes, no per-unit loop). Long units stay on the slice path
-        # below, where memcpy beats a byte gather.
-        base8 = np.frombuffer(base, np.uint8)
-        combined = np.concatenate((base8, np.frombuffer(delta, np.uint8)))
-        src = np.where(flags == 1, offsets, ins_start + base8.size)
-        out_starts = np.cumsum(lengths) - lengths
-        idx = np.ones(n_out, np.int64)
-        idx[0] = src[0]
-        if lengths.size > 1:
-            idx[out_starts[1:]] = src[1:] - (src[:-1] + lengths[:-1] - 1)
-        np.cumsum(idx, out=idx)
-        return combined[idx].tobytes()
-    parts = []
-    for flag, length, offset, ds in zip(
-        flags.tolist(), lengths.tolist(), offsets.tolist(), ins_start.tolist()
-    ):
-        if flag:
-            parts.append(base[offset : offset + length])
-        else:
-            parts.append(delta[ds : ds + length])
-    return b"".join(parts)
+    """Interpret one delta blob against ``base``; returns the target bytes."""
+    return gdelta_decode_batch(delta, [(0, len(delta))], base)[0]
 
 
 def gdelta_decode_batch(
     payload: bytes, spans: list[tuple[int, int]], base: bytes
 ) -> list[bytes]:
-    """Decode MANY row deltas stored contiguously in ``payload`` with one
-    vectorized parse and one assembly pass — the block-level form of
-    ``gdelta_decode`` (SURVEY §2.1 row 2). Per-row decode pays a fixed
-    ~80us of numpy dispatch per row; a texty block of 500 small deltas pays
-    it 500 times. Here all rows' instruction streams concatenate into one
-    array (0x00 separators re-parse as zero-length phantom units whose
-    a==0 head resets the continuation-parity run — see ``_parse_stream``),
-    so the classification/varint passes amortize across the block.
+    """Decode the row deltas stored at ``payload[st:st+ln]`` for each
+    ``(st, ln)`` in ``spans`` against ``base``.
 
-    Falls back to per-row ``gdelta_decode`` on any irregular row (empty or
-    unterminated stream) — identical output either way, enforced by the
-    equality tests."""
+    Blocks with enough instruction bytes decode with one vectorized parse
+    and one assembly pass (SURVEY §2.1 row 2): the rows' instruction
+    streams concatenate into one array (0x00 separators re-parse as
+    zero-length phantom units whose a==0 head resets the
+    continuation-parity run — see ``_parse_stream``), so the numpy fixed
+    costs (~80us) are paid once per block, not once per row. Sparse
+    streams (few long units per row — near-dup rows) and short blocks are
+    memcpy-bound and decode row by row in ``_decode_row`` instead; so do
+    empty or unterminated streams. Both paths raise ``CorruptBlockError``
+    on a copy past ``base`` or a unit or literal past its row."""
     n = len(spans)
     if n == 0:
         return []
-    # dispatch on a header SAMPLE: sparse streams (few long units per row —
-    # near-dup/raw-ish rows) decode memcpy-bound in the scalar per-row loop
-    # and would only pay the batch machinery's fixed numpy costs; blocks are
-    # cluster-homogeneous, so 16 headers predict the rest
-    probe = 0
-    for st, _ in spans[:16]:
-        probe += read_varint(payload, st)[0]
-    if probe < 64 * min(n, 16):
-        return [gdelta_decode(payload[st : st + ln], base) for st, ln in spans]
-    inst_start = np.empty(n, np.int64)
-    inst_lens = np.empty(n, np.int64)
-    for r, (st, ln) in enumerate(spans):
-        il, pos = read_varint(payload, st)
-        # (pos - st) accounts for the varint header already consumed: a row
-        # whose header + instruction stream exceeds its span would otherwise
-        # read its final byte from the NEXT row (ADVICE r2 — il == ln edge)
-        if il == 0 or (pos - st) + il > ln or payload[pos + il - 1] & 1:
-            return [gdelta_decode(payload[st : st + ln], base) for st, ln in spans]
-        inst_start[r] = pos
-        inst_lens[r] = il
+    heads = [_row_header(payload, st, ln) for st, ln in spans]
+    # dispatch on a header SAMPLE: blocks are cluster-homogeneous, so 16
+    # rows' instruction bytes predict the rest; below ~1 KiB (about 300
+    # units) the per-unit loop beats the batch machinery's fixed costs
+    if sum(il for _, il in heads[:16]) < _VEC_MIN_INST or any(
+        il == 0 or payload[pos + il - 1] & 1 for pos, il in heads
+    ):
+        return [
+            _decode_row(payload, pos, pos + il, st + ln, base)
+            for (pos, il), (st, ln) in zip(heads, spans)
+        ]
+    inst_start = np.array([pos for pos, _ in heads], np.int64)
+    inst_lens = np.array([il for _, il in heads], np.int64)
+    span_end = np.array([st + ln for st, ln in spans], np.int64)
     p8 = np.frombuffer(payload, np.uint8)
     base8 = np.frombuffer(base, np.uint8)
 
     sep = np.zeros(1, np.uint8)
     pieces: list[np.ndarray] = []
-    s_row_start = np.empty(n, np.int64)
-    off = 0
-    for r in range(n):
-        s_row_start[r] = off
-        pieces.append(p8[inst_start[r] : inst_start[r] + inst_lens[r]])
+    for pos, il in heads:
+        pieces.append(p8[pos : pos + il])
         pieces.append(sep)
-        off += inst_lens[r] + 1
+    s_row_start = np.zeros(n, np.int64)
+    np.cumsum(inst_lens[:-1] + 1, out=s_row_start[1:])
     flags, lengths, offsets, head_pos = _parse_stream(np.concatenate(pieces))
+    # a row's separator parses as its own head unless the row's last unit
+    # is cut short and swallowed it as a continuation
+    seps = s_row_start + inst_lens
+    j = np.searchsorted(head_pos, seps)
+    if (j >= head_pos.size).any() or (head_pos[np.minimum(j, head_pos.size - 1)] != seps).any():
+        raise CorruptBlockError("gdelta unit runs past its row")
     row_id = np.searchsorted(s_row_start, head_pos, side="right") - 1
 
     # insert units consume their OWN row's literal data region, which starts
@@ -393,6 +369,10 @@ def gdelta_decode_batch(
     ln = lengths[keep]
     src = np.where(fl == 1, offsets[keep], base8.size + ins_abs[keep])
     rid = row_id[keep]
+    if ((fl == 1) & (src + ln > base8.size)).any():
+        raise CorruptBlockError("gdelta copy unit reads past its base")
+    if ((fl == 0) & (src - base8.size + ln > span_end[rid])).any():
+        raise CorruptBlockError("gdelta literal runs past its row")
     row_out = np.zeros(n, np.int64)
     np.add.at(row_out, rid, ln)
 
@@ -427,25 +407,6 @@ def gdelta_decode_batch(
 # ---------------------------------------------------------------------------
 # encode
 # ---------------------------------------------------------------------------
-
-
-def _common_prefix_len(a: np.ndarray, b: np.ndarray) -> int:
-    n = min(a.size, b.size)
-    if n == 0:
-        return 0
-    neq = a[:n] != b[:n]
-    i = int(np.argmax(neq))
-    return n if not neq[i] else i
-
-
-def _common_suffix_len(a: np.ndarray, b: np.ndarray) -> int:
-    n = min(a.size, b.size)
-    if n == 0:
-        return 0
-    neq = a[a.size - n :] != b[b.size - n :]
-    rev = neq[::-1]
-    i = int(np.argmax(rev))
-    return n if not rev[i] else i
 
 
 _GEAR4 = (GEAR << _SHIFT).copy()  # level-0 fusion: GEAR[b] pre-shifted by 4
@@ -487,8 +448,8 @@ _LOW32 = np.uint64(0xFFFFFFFF)
 
 
 class BaseIndex:
-    """Per-base precompute shared across many ``gdelta_encode`` calls of a
-    group (the pipeline encodes hundreds of rows against one elected base).
+    """Per-base precompute shared by every row of a ``gdelta_encode_group``
+    call (the pipeline encodes hundreds of rows against one elected base).
 
     Holds the full-base Gear fingerprints, the pre-packed table entries
     ``(pos << 32) | low32(fp)`` for every window position, per-``bit`` index
@@ -572,72 +533,24 @@ class BaseIndex:
         self._dense[key_bp] = t
         return t
 
-    def table(self, base8: np.ndarray, beg_size: int, end_size: int, bit: int) -> np.ndarray:
+    def table(self, beg_size: int, end_size: int, bit: int) -> np.ndarray:
+        """Single-slot hash table for a row eliding ``beg_size``/``end_size``
+        base bytes: fingerprint top ``bit`` bits -> packed entry, 0 = empty.
+        Every 2nd window from interior offset 2 is inserted, last writer wins
+        (gdelta.cpp:176-214). Positions strictly increase along the strided
+        views, so one C-order fancy assignment is that overwrite."""
         key = (beg_size, end_size, bit)
         t = self.tables.get(key)
         if t is None:
-            t = _build_hash_table(base8, beg_size, end_size, bit, self)
+            t = np.zeros(1 << bit, dtype=np.uint64)
+            n_fps = self.fps.size - beg_size - end_size  # interior windows
+            if n_fps > 2:
+                sl = slice(beg_size + 2, beg_size + n_fps, STRLSTEP)
+                t[self.idx(bit)[sl]] = self.packed[sl]
             if len(self.tables) >= self._MAX_TABLES:
                 self.tables.pop(next(iter(self.tables)))
             self.tables[key] = t
         return t
-
-
-def _build_hash_table(
-    base8: np.ndarray,
-    beg_size: int,
-    end_size: int,
-    bit: int,
-    base_fps: BaseIndex | None = None,
-) -> np.ndarray:
-    """Single-slot hash table over the base interior: fingerprint top ``bit``
-    bits -> packed u64 entry ``(abs_pos << 32) | (fp & 0xFFFFFFFF)``, 0 =
-    empty. Sampling every 2nd window starting at interior offset 2,
-    last-writer-wins (gdelta.cpp:176-214); positions are strictly
-    increasing and occupy the HIGH half, so one ``maximum.at`` is the
-    whole insert — no winner re-derivation, no second scatter, and the
-    table is rebuilt per (base, target) pair, which made that scatter the
-    single hottest line of the encoder.
-
-    The low fp bits are the candidate prefilter (together with the slot's
-    implicit top bits: ~47 effective bits). It is a *prefilter* only — the
-    exact 16-byte compare decides acceptance exactly as the reference's
-    memcmp does, so weakening it from the previous full-64-bit parallel
-    table cannot change emitted bytes, only add vanishingly rare extra
-    compares.
-    """
-    table = np.zeros(1 << bit, dtype=np.uint64)
-    interior_len = base8.size - end_size - beg_size
-    if interior_len < STRLOOK:
-        return table
-    n_fps = interior_len - STRLOOK + 1
-    if n_fps <= 2:
-        return table
-    if base_fps is not None:
-        # zero-compute build: strided views of the per-base precomputed index
-        # and packed-entry arrays, one fancy-index scatter. Positions strictly
-        # increase along the views, so C-order fancy assignment == the
-        # reference's last-writer-wins overwrite (differential-tested against
-        # maximum.at in test_gdelta_codec).
-        idxv = base_fps.idx(bit)[beg_size + 2 : beg_size + n_fps : STRLSTEP]
-        if idxv.size == 0:
-            return table
-        table[idxv] = base_fps.packed[beg_size + 2 : beg_size + n_fps : STRLSTEP]
-        return table
-    fps = _gear_fingerprints(base8[beg_size : base8.size - end_size])
-    sampled = fps[2:n_fps:STRLSTEP]
-    abs_start = beg_size + 2
-    if sampled.size == 0:
-        return table
-    # .view(int64) = zero-copy reinterpret; top-bits shift keeps values < 2^63
-    idx = (sampled >> np.uint64(64 - bit)).view(np.int64)
-    packed = np.arange(
-        abs_start, abs_start + sampled.size * STRLSTEP, STRLSTEP, dtype=np.uint64
-    )
-    packed <<= np.uint64(32)
-    packed |= sampled & _LOW32
-    np.maximum.at(table, idx, packed)
-    return table
 
 
 def _first_mismatch(a: np.ndarray, b: np.ndarray, limit: int) -> int:
@@ -664,212 +577,3 @@ def _last_mismatch_run(a: np.ndarray, b: np.ndarray, limit: int) -> int:
     rev = neq[::-1]
     i = int(np.argmax(rev))
     return limit if not rev[i] else i
-
-
-def gdelta_encode(
-    new: bytes, base: bytes, base_fps: BaseIndex | None = None
-) -> bytes:
-    new8 = np.frombuffer(new, dtype=np.uint8)
-    base8 = np.frombuffer(base, dtype=np.uint8)
-    new_size = new8.size
-    base_size = base8.size
-
-    # prefix/suffix elision with >16B thresholds (gdelta.cpp:234-272)
-    beg_size = _common_prefix_len(base8, new8)
-    beg = beg_size > 16
-    if not beg:
-        beg_size = 0
-    end_size = _common_suffix_len(base8, new8)
-    if beg_size + end_size > new_size:
-        end_size = new_size - beg_size
-    end = end_size > 16
-    if not end:
-        end_size = 0
-
-    inst = bytearray()
-    data = bytearray()
-
-    def assemble() -> bytes:
-        out = bytearray()
-        write_varint(out, len(inst))
-        out += inst
-        out += data
-        return bytes(out)
-
-    # fast path: base fully covered by prefix+suffix (gdelta.cpp:280-318)
-    if beg_size + end_size >= base_size:
-        if beg:
-            write_unit(inst, 1, beg_size, 0)
-        litlen = new_size - beg_size - end_size
-        if litlen > 0:
-            write_unit(inst, 0, litlen, 0)
-            data += new[beg_size : new_size - end_size]
-        if end:
-            write_unit(inst, 1, end_size, base_size - end_size)
-        return assemble()
-
-    # hash table sizing: bit_length(interior + 10) (gdelta.cpp:321-328)
-    interior = base_size - beg_size - end_size
-    bit = (interior + 10).bit_length()
-    table = None
-    if base_fps is not None:
-        # lazy: small probe segments use the sorted-key winner query instead
-        # of a table; the table is built (and cached) only if a big segment
-        # ever loads. A cached table is used immediately when present.
-        bi = base_fps
-        table = bi.tables.get((beg_size, end_size, bit))
-        n_fps_b = interior - STRLOOK + 1
-        key_lo = beg_size + 2
-        key_hi = beg_size + n_fps_b if n_fps_b > 2 else key_lo
-        skey = bi.sorted_key(bit, key_lo & 1)
-        fps_full = bi.fps
-    else:
-        bi = None
-        table = _build_hash_table(base8, beg_size, end_size, bit)
-
-    n2 = new_size - end_size  # exclusive end of the scan region
-    tgt = new8[beg_size:n2]
-    m = tgt.size
-    last_pos = m - STRLOOK  # last probe-able position
-
-    if beg:
-        write_unit(inst, 1, beg_size, 0)
-
-    base_lim = base_size - end_size  # match extension bound (gdelta.cpp:400-408)
-    shift = np.uint64(64 - bit)
-    tb = tgt.tobytes()  # for cheap 16-byte exact verifies
-    bb_mem = base8.tobytes() if not isinstance(base, (bytes, bytearray)) else base
-
-    # Lazy per-segment probing: fingerprints/candidates are computed only for
-    # the segments the cursor actually visits. Segments are sized adaptively:
-    # the first load after a match is tiny (on near-duplicate data the gap to
-    # the next match is a few dozen bytes — computing a 256 KiB segment of
-    # fingerprints to cross it was the round-3 encoder's dominant cost), and
-    # each further load in the same gap grows 8x so genuinely literal regions
-    # (mixed-dup rows that never match) converge to the big-segment path
-    # within three loads.
-    SEG = 1 << 18
-    SEG0 = 1 << 8
-    seg_start = seg_end = 0
-    seg_pos = np.empty(0, dtype=np.int64)  # prefilter-passing positions
-    seg_cand = np.empty(0, dtype=np.int64)  # their candidate base offsets
-
-    def load_segment(s: int, size: int) -> None:
-        nonlocal seg_start, seg_end, seg_pos, seg_cand, table
-        seg_start = s
-        seg_end = min(s + size, last_pos + 1)
-        fps = _gear_fingerprints(tgt[s : seg_end + STRLOOK - 1])
-        if table is None and fps.size >= 2048:
-            table = bi.table(base8, beg_size, end_size, bit)
-        if table is None:
-            # table-free winner query: the last-writer-wins slot winner is
-            # the largest eligible sampled base position hashing to the slot
-            # (see BaseIndex.sorted_key); the full-64-bit fingerprint equality
-            # is a conservative prefilter exactly like the low32 one
-            if skey.size == 0:  # base too small to index (< one window)
-                seg_pos = np.empty(0, dtype=np.int64)
-                seg_cand = np.empty(0, dtype=np.int64)
-                return
-            slot = fps >> shift
-            j = np.searchsorted(skey, (slot << np.uint64(32)) | np.uint64(key_hi - 1), side="right") - 1
-            kj = skey[np.maximum(j, 0)]
-            pos = (kj & _LOW32).astype(np.int64)
-            ok = j >= 0
-            ok &= (kj >> np.uint64(32)) == slot
-            ok &= pos >= key_lo
-            ok &= fps_full[pos] == fps
-            rel = np.flatnonzero(ok)
-            seg_pos = rel + s
-            seg_cand = pos[rel]
-            return
-        idx = (fps >> shift).view(np.int64)
-        entry = table[idx]
-        ok = entry != 0
-        ok &= (entry & _LOW32) == (fps & _LOW32)
-        rel = np.flatnonzero(ok)
-        seg_pos = rel + s
-        seg_cand = (entry[rel] >> np.uint64(32)).astype(np.int64)
-
-    def next_match(p: int) -> tuple[int, int]:
-        """First position q >= p whose candidate 16-byte window verifies
-        exactly; returns (q, offset) or (-1, 0). Identical accept set to the
-        reference's per-position probe: equal bytes => equal fingerprint =>
-        passes the prefilter; the exact compare then mirrors the memcmp."""
-        size = SEG0
-        while True:
-            if p > last_pos:
-                return -1, 0
-            if not (seg_start <= p < seg_end) or seg_end == seg_start:
-                load_segment(p, size)
-                size = min(size * 8, SEG)
-            i = int(np.searchsorted(seg_pos, p))
-            while i < seg_pos.size:
-                q = int(seg_pos[i])
-                c = int(seg_cand[i])
-                if tb[q : q + STRLOOK] == bb_mem[c : c + STRLOOK]:
-                    return q, c
-                i += 1
-            p = seg_end
-            if p > last_pos:
-                return -1, 0
-
-    p = 0  # cursor, relative to tgt
-    lit_from = 0  # start of pending literal, relative to tgt
-    stale_cand = -1  # candidate under the stale fingerprint, if in that state
-
-    while p + STRLOOK <= m:
-        if stale_cand >= 0:
-            # reference quirk: fp not refreshed when the previous match ended
-            # exactly 16 bytes before n2 (gdelta.cpp:452 loop guard), so the
-            # final probe reuses the previous window's fingerprint/slot.
-            offset = stale_cand
-            matched = tb[p : p + STRLOOK] == bb_mem[offset : offset + STRLOOK]
-            q = p if matched else -1
-        else:
-            q, offset = next_match(p)
-            matched = q >= 0
-            if matched:
-                # literal run tgt[lit_from:q] becomes pending before the match
-                p = q
-
-        if not matched:
-            break  # everything from lit_from on is literal; tail flush below
-
-        # forward extension (gdelta.cpp:398-411)
-        cursor = q + STRLOOK
-        max_j = min(base_lim - (offset + STRLOOK), m - cursor)
-        j = 0
-        if max_j > 0:
-            j = _first_mismatch(
-                base8[offset + STRLOOK : offset + STRLOOK + max_j],
-                tgt[cursor : cursor + max_j],
-                max_j,
-            )
-        matchlen = STRLOOK + j
-        copy_off = offset
-        litlen = q - lit_from
-        if litlen > 0:
-            # backward literal->copy conversion (gdelta.cpp:420-442)
-            kmax = min(offset, litlen)
-            k = 0
-            if kmax > 0:
-                k = _last_mismatch_run(base8[:offset], tgt[:q], kmax)
-            litlen -= k
-            matchlen += k
-            copy_off -= k
-            # reference writes the (possibly zero-length) literal unit
-            write_unit(inst, 0, litlen, 0)
-            data += tgt[lit_from : q - k].tobytes()
-        write_unit(inst, 1, matchlen, copy_off)
-        p = cursor + j
-        lit_from = p
-        # stale-fp edge: rebuild skipped iff cursor+16 == n2 in absolute terms
-        stale_cand = offset if p + STRLOOK == m else -1
-
-    # tail flush (gdelta.cpp:486-514)
-    if m > lit_from:
-        write_unit(inst, 0, m - lit_from, 0)
-        data += tgt[lit_from:m].tobytes()
-    if end:
-        write_unit(inst, 1, end_size, base_size - end_size)
-    return assemble()

@@ -1,17 +1,24 @@
-"""Lockstep batched gdelta group encoder — byte-identical to gdelta_encode.
+"""The gdelta encoder: every row of a group against one base, in lockstep.
 
-The single-row encoder's cost on near-duplicate data is dominated by FIXED
-numpy dispatch: each probe-gap needs fingerprints for only a few dozen
-positions, but every (fps + table-gather + mask + flatnonzero) round costs
-~40us regardless of size.  The pipeline always encodes a *group* of rows
-against ONE elected base (SURVEY §7 build plan; delta blocks are built per
-partition bucket), so this module advances ALL rows of the group in
-lockstep rounds and batches each round's array work across rows:
+Blobs are byte-identical to the C++ reference encoder's (gdelta.cpp:216-531)
+for every row. A single row is a group of one. Per-row encoding on
+near-duplicate data is dominated by FIXED numpy dispatch: each probe gap
+needs fingerprints for only a few dozen positions, but every (fps +
+table-gather + mask + flatnonzero) round costs ~40us regardless of size.
+The pipeline encodes a *group* of rows against ONE elected base (SURVEY §7
+build plan; delta blocks are built per partition bucket), so this module
+advances ALL rows of the group in lockstep rounds and batches each round's
+array work across rows:
 
 - SCAN rounds:   every scanning row contributes its current gap window; ONE
   ``_gear_fingerprints`` call covers the concatenation, ONE ``searchsorted``
   against a per-(bit,parity) sorted ``(slot<<32)|pos`` key array answers all
-  rows' last-writer-wins table lookups (no per-row hash table at all).
+  rows' last-writer-wins table lookups (no per-row hash table at all). A
+  group with one scanning row uses that row's hash table instead: nothing
+  would amortize the sort.
+- After a match a row keeps walking the same window's hits from its new
+  cursor, so a row with many short matches (texty data) pays one round per
+  window, not one per copy unit.
 - Forward extensions complete INLINE at verify time: 1 KiB ``bytes`` block
   compares (C memcmp) with halving refinement, falling through to one
   numpy first-mismatch call past 8 KiB — near-dup extensions average
@@ -21,15 +28,14 @@ lockstep rounds and batches each round's array work across rows:
 - Backward literal->copy runs are typically a handful of bytes — an inline
   Python byte loop with a numpy fallback past 64.
 
-Byte parity argument (enforced by test_gdelta_group differential tests and
-transitively by the C++-oracle parity suite): the candidate for a target
-position is a pure function of (base, beg, end, bit, position) — the
-reference's single-slot last-writer-wins winner is the largest sampled base
-position in ``[beg+2, beg+n_fps)`` hashing to the slot, which the sorted-key
-query returns exactly; acceptance is the same exact 16-byte compare; and the
-greedy walk order per row is unchanged, so every row's unit stream is
-byte-identical to ``gdelta_encode``'s (and therefore to the C++ reference's,
-gdelta.cpp:216-531).
+Byte parity argument (enforced against a plain single-row transcription of
+the reference encoder by the differential tests, and by golden vectors):
+the candidate for a target position is a pure function of (base, beg, end,
+bit, position) — the reference's single-slot last-writer-wins winner is the
+largest sampled base position in ``[beg+2, beg+n_fps)`` hashing to the
+slot, which the sorted-key query returns exactly; acceptance is the same
+exact 16-byte compare; and the greedy walk order per row is the
+reference's, so every row's unit stream is the reference's.
 
 Reference anchors: greedy loop gdelta.cpp:378-473, chunking/table
 gdelta.cpp:176-214, prefix/suffix gdelta.cpp:234-272, fast path
@@ -37,6 +43,8 @@ gdelta.cpp:280-318, tail flush gdelta.cpp:486-514.
 """
 
 from __future__ import annotations
+
+from bisect import bisect_left
 
 import numpy as np
 
@@ -53,7 +61,7 @@ from gdelta_spark.codecs.gdelta_codec import (
 _SCAN0 = 1 << 6  # first scan chunk after a match: gaps are tiny on near-dup
 _SCANMAX = 1 << 18
 
-_SCAN, _STALE = 0, 2
+_SCAN, _DONE, _STALE = 0, 1, 2
 
 
 def _common_prefix_bytes(a: bytes, b: bytes) -> int:
@@ -110,8 +118,7 @@ class _Row:
     __slots__ = (
         "i", "tgt", "tb", "m", "last_pos", "inst", "data",
         "beg", "beg_size", "end", "end_size", "base_lim", "bit",
-        "lo", "hi", "p", "lit_from", "stale_cand", "state",
-        "chunk", "q", "off",
+        "lo", "hi", "p", "lit_from", "stale_cand", "state", "chunk",
     )
 
 
@@ -133,13 +140,10 @@ def _finish_row(row: _Row, base_size: int) -> bytes:
     return _assemble(row)
 
 
-def gdelta_encode_group(
-    rows_bytes: list[bytes], base: bytes, bi: BaseIndex | None = None
-) -> list[bytes]:
-    """Encode every row against ``base``; returns blobs byte-identical to
-    ``[gdelta_encode(r, base) for r in rows_bytes]`` (differential-tested)."""
-    if bi is None:
-        bi = BaseIndex(base)
+def gdelta_encode_group(rows_bytes: list[bytes], base: bytes) -> list[bytes]:
+    """Delta blob of every row against ``base``, each byte-identical to the
+    C++ reference encoder's."""
+    bi = BaseIndex(base)
     base8 = np.frombuffer(base, dtype=np.uint8)
     base_size = base8.size
     bb = base if isinstance(base, bytes) else bytes(base)
@@ -208,6 +212,7 @@ def gdelta_encode_group(
         scanning.append(row)
 
     fps_full = bi.fps
+    solo = len(scanning) == 1
 
     def _extend_forward(tb: bytes, t0: int, b0: int, cap: int) -> int:
         """Length of the common prefix of tb[t0:t0+cap] vs base[b0:b0+cap].
@@ -248,18 +253,12 @@ def gdelta_encode_group(
             )
         return got
 
-    def begin_extension(row: _Row, q: int, off: int) -> None:
-        """Match accepted at (q, off); extend forward inline and emit."""
-        row.q, row.off = q, off
+    def emit_match(row: _Row, q: int, off: int) -> None:
+        """Match accepted at (q, off): extend forward inline, emit its units
+        (gdelta.cpp:398-455) and set the row's next state."""
         cursor = q + STRLOOK
         cap = min(row.base_lim - (off + STRLOOK), row.m - cursor)
         j = _extend_forward(row.tb, cursor, off + STRLOOK, cap) if cap > 0 else 0
-        finish_match(row, j)
-
-    def finish_match(row: _Row, j: int) -> None:
-        """Emit units for the match (gdelta.cpp:411-455) and re-enter the
-        machine (scan / stale-probe / tail)."""
-        q, off = row.q, row.off
         matchlen = STRLOOK + j
         copy_off = off
         litlen = q - row.lit_from
@@ -286,28 +285,29 @@ def gdelta_encode_group(
         row.lit_from = p
         if p + STRLOOK > row.m:
             out[row.i] = _finish_row(row, base_size)
-            return
-        if p + STRLOOK == row.m:
+            row.state = _DONE
+        elif p + STRLOOK == row.m:
             # stale-fingerprint quirk (gdelta.cpp:452): the final probe reuses
             # the previous window's candidate instead of rehashing
             row.stale_cand = off
             row.state = _STALE
         else:
-            row.stale_cand = -1
             row.chunk = _SCAN0
             row.state = _SCAN
-        scanning.append(row)
 
     def run_stale(row: _Row) -> None:
         p, sc = row.p, row.stale_cand
         if row.tb[p : p + STRLOOK] == bb[sc : sc + STRLOOK]:
-            begin_extension(row, p, sc)
+            emit_match(row, p, sc)
+            if row.state != _DONE:
+                scanning.append(row)
         else:
             out[row.i] = _finish_row(row, base_size)
 
     def batch_scan(rows: list[_Row]) -> None:
         # window/fps concat across all rows of this round
         sl_list = []
+        off_list = [0]
         pieces = []
         for row in rows:
             sl = row.last_pos + 1 - row.p
@@ -315,12 +315,11 @@ def gdelta_encode_group(
                 sl = row.chunk
             sl_list.append(sl)
             pieces.append(row.tgt[row.p : row.p + sl + STRLOOK - 1])
-        scanlens = np.array(sl_list, np.int64)
-        offs = np.zeros(len(rows) + 1, np.int64)
-        np.cumsum([p.size for p in pieces], out=offs[1:])
-        off_list = offs.tolist()
-        fps_all = _gear_fingerprints(np.concatenate(pieces))
-        # valid fps for row k live at [offs[k], offs[k]+scanlens[k])
+            off_list.append(off_list[-1] + sl + STRLOOK - 1)
+        fps_all = _gear_fingerprints(
+            pieces[0] if len(pieces) == 1 else np.concatenate(pieces)
+        )
+        # valid fps for row k live at [off_list[k], off_list[k]+sl_list[k])
         # (the window tail's fps cross into the next row's bytes — discarded)
 
         # winner query. Two regimes: short gap chunks (the near-dup common
@@ -328,12 +327,13 @@ def gdelta_encode_group(
         # sorted (slot<<32)|pos key; long chunks (rows with no nearby match —
         # literal-heavy data) pay ~30ns/probe in searchsorted where a dense
         # table gather pays ~3ns, so they use the per-row cached table
-        # instead (identical winners; differential-tested).
+        # instead (identical winners; differential-tested). A lone scanning
+        # row always takes its table: no other row would share the sort.
         groups: dict[tuple[int, int], list[int]] = {}
         hits_by_row: dict[int, tuple[list[int], list[int]]] = {}
         for k, row in enumerate(rows):
-            if sl_list[k] >= 2048:
-                table = bi.table(base8, row.beg_size, row.end_size, row.bit)
+            if solo or sl_list[k] >= 2048:
+                table = bi.table(row.beg_size, row.end_size, row.bit)
             else:
                 # short chunks: a dense table is only worth a gather if some
                 # earlier row already built this (beg,end,bit) — never build
@@ -360,7 +360,7 @@ def gdelta_encode_group(
             f = np.concatenate(
                 [fps_all[off_list[k] : off_list[k] + sl_list[k]] for k in ks]
             )
-            lens = scanlens[ks]
+            lens = np.array([sl_list[k] for k in ks], np.int64)
             his1 = np.repeat(
                 np.array([rows[k].hi - 1 for k in ks], np.int64), lens
             )
@@ -424,26 +424,36 @@ def gdelta_encode_group(
                 )
 
         # per-row resolution: first exactly-verifying candidate wins (the
-        # reference's memcmp accept, gdelta.cpp:390-396)
+        # reference's memcmp accept, gdelta.cpp:390-396). After a match the
+        # row keeps walking this window's hits from its new cursor: a
+        # position's candidate does not depend on where the scan started, so
+        # a new round is needed only once the cursor leaves the window.
         for k, row in enumerate(rows):
-            matched = False
+            end = row.p + sl_list[k]
             hb = hits_by_row.get(k)
             if hb is not None:
+                qs, cs = hb
                 tb = row.tb
-                for q, c in zip(hb[0], hb[1]):
-                    if tb[q : q + STRLOOK] == bb[c : c + STRLOOK]:
-                        begin_extension(row, q, c)
-                        matched = True
+                h = 0
+                while h < len(qs):
+                    q, c = qs[h], cs[h]
+                    if tb[q : q + STRLOOK] != bb[c : c + STRLOOK]:
+                        h += 1
+                        continue
+                    emit_match(row, q, c)
+                    if row.state != _SCAN or row.p >= end:
                         break
-            if matched:
+                    h = bisect_left(qs, row.p, h + 1)
+            if row.state == _DONE:
                 continue
-            p = row.p + sl_list[k]
-            if p > row.last_pos:
-                out[row.i] = _finish_row(row, base_size)
-            else:
-                row.p = p
+            if row.state == _SCAN and row.p < end:
+                # no verifying hit left in [row.p, end): skip the window
+                if end > row.last_pos:
+                    out[row.i] = _finish_row(row, base_size)
+                    continue
+                row.p = end
                 row.chunk = min(row.chunk * 8, _SCANMAX)
-                scanning.append(row)
+            scanning.append(row)
 
     # ---- lockstep rounds (scan-only: extensions complete inline) ----
     while scanning:

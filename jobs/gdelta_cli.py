@@ -16,7 +16,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from gdelta_spark.codecs.gdelta_codec import gdelta_decode, gdelta_encode  # noqa: E402
+from gdelta_spark.codecs.gdelta_codec import gdelta_decode  # noqa: E402
+from gdelta_spark.codecs.gdelta_group import gdelta_encode_group  # noqa: E402
 
 
 def main() -> int:
@@ -31,7 +32,7 @@ def main() -> int:
 
     base = Path(args.basefile).read_bytes()
     second = Path(args.target_or_delta).read_bytes()
-    out = gdelta_encode(second, base) if args.e else gdelta_decode(second, base)
+    out = gdelta_encode_group([second], base)[0] if args.e else gdelta_decode(second, base)
 
     if args.o:
         Path(args.o).write_bytes(out)

@@ -10,14 +10,20 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from conftest import REF_SRC, REPO
+from gdelta_oracle import gdelta_encode as oracle_encode
 
 from gdelta_spark.codecs.gdelta_codec import (
     gdelta_decode,
-    gdelta_encode,
-    parse_units,
+    parse_units_arrays,
     read_varint,
+    write_unit,
     write_varint,
 )
+from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
+
+
+def gdelta_encode(target: bytes, base: bytes) -> bytes:
+    return gdelta_encode_group([target], base)[0]
 
 rng = np.random.default_rng(42)
 
@@ -120,7 +126,11 @@ def test_parse_units_phantoms():
     base = b"A" * 100
     target = b"A" * 100 + b"B"
     delta = gdelta_encode(target, base)
-    units, _ = parse_units(delta)
+    flags, lengths, offsets, _ = parse_units_arrays(delta)
+    # COPY 100 @0, then the 1-byte literal whose stray 0x00 is the phantom
+    assert flags.tolist() == [1, 0, 0]
+    assert lengths.tolist() == [100, 1, 0]
+    assert offsets.tolist() == [0, 0, 0]
     assert gdelta_decode(delta, base) == target
 
 
@@ -178,30 +188,121 @@ def test_batch_decode_empty_and_single():
 
 
 def test_base_index_encode_identical():
-    """BaseIndex fast path (cached tables, fancy-assign scatter, zero-compute
-    strided builds) must not change a single emitted byte vs the plain path."""
-    from gdelta_spark.codecs.gdelta_codec import BaseIndex
-
+    """Rows that share a base index's cached tables and winner structures
+    within one group emit the same bytes as the single-row oracle."""
     for name, base, target in CASES:
-        if not base:
-            continue
-        bi = BaseIndex(base)
-        plain = gdelta_encode(target, base)
-        with_index = gdelta_encode(target, base, bi)
-        again = gdelta_encode(target, base, bi)  # cached-table path
-        assert plain == with_index == again, name
+        want = oracle_encode(target, base)
+        assert gdelta_encode_group([target] * 3, base) == [want] * 3, name
 
 
 def test_base_index_table_matches_plain_build():
     """The strided-view fancy-assign scatter must reproduce the reference's
     last-writer-wins table exactly (C-order fancy assignment == overwrite)."""
-    from gdelta_spark.codecs.gdelta_codec import BaseIndex, _build_hash_table
+    from gdelta_oracle import build_hash_table
+
+    from gdelta_spark.codecs.gdelta_codec import BaseIndex
 
     base = _rand_bytes(5000)
     base8 = np.frombuffer(base, np.uint8)
     bi = BaseIndex(base)
-    for beg, end in [(0, 0), (0, 100), (17, 0), (17, 33), (1, 1), (101, 202)]:
+    for beg, end in [(0, 0), (0, 100), (17, 0), (17, 33), (1, 1), (101, 202), (0, 4990)]:
         bit = ((len(base) - beg - end) + 10).bit_length()
-        plain = _build_hash_table(base8, beg, end, bit, None)
-        fast = _build_hash_table(base8, beg, end, bit, bi)
-        assert np.array_equal(plain, fast), (beg, end)
+        assert np.array_equal(build_hash_table(base8, beg, end, bit), bi.table(beg, end, bit)), (beg, end)
+
+
+def _split_payload(payload: bytes) -> list[bytes]:
+    import struct
+
+    from gdelta_spark.codecs.light import _unpack_for
+
+    (n,) = struct.unpack_from("<I", payload, 0)
+    lens, pos = _unpack_for(payload, 4)
+    blobs = []
+    for ln in lens.tolist():
+        blobs.append(payload[pos : pos + ln])
+        pos += ln
+    assert len(blobs) == n
+    return blobs
+
+
+def _join_payload(blobs: list[bytes]) -> bytes:
+    import struct
+
+    from gdelta_spark.codecs.light import _pack_for
+
+    lens = np.array([len(b) for b in blobs], dtype=np.int64)
+    return struct.pack("<I", len(blobs)) + _pack_for(lens) + b"".join(blobs)
+
+
+def _rewrite_first_copy(blob: bytes, offset: int) -> bytes:
+    """``blob`` with its first COPY unit's base offset replaced."""
+    flags, lengths, offsets, inst_end = parse_units_arrays(blob)
+    inst = bytearray()
+    done = False
+    for f, ln, off in zip(flags.tolist(), lengths.tolist(), offsets.tolist()):
+        if ln == 0:
+            continue  # write_unit re-emits the phantoms itself
+        if f and not done:
+            off, done = offset, True
+        write_unit(inst, f, ln, off)
+    assert done
+    head = bytearray()
+    write_varint(head, len(inst))
+    return bytes(head) + bytes(inst) + blob[inst_end:]
+
+
+@pytest.mark.parametrize("regime", ["near-dup", "texty"])
+@pytest.mark.parametrize("n_rows", [1, 12])
+@pytest.mark.parametrize("fault", ["copy-past-base", "literal-truncated"])
+def test_corrupt_payload_raises(regime, n_rows, fault):
+    """A row payload with one copy offset past the base, or with one row's
+    literal region cut short, raises CorruptBlockError on both decode paths
+    (one row decodes in the per-unit loop, twelve in one batch) and never
+    returns rows."""
+    from gdelta_spark.codecs import delta
+    from gdelta_spark.codecs.core import CorruptBlockError
+    from gdelta_spark.fixtures import make_tokens
+
+    arrays = [make_tokens(7, regime, i) for i in range(n_rows + 1)]
+    base = arrays[0].astype("<i4").tobytes()
+    payload = delta.gdelta_rows_payload(arrays[1:], base)
+    blobs = _split_payload(payload)
+    k = n_rows // 2  # a middle row: its overrun would read the next row
+    if fault == "copy-past-base":
+        blobs[k] = _rewrite_first_copy(blobs[k], len(base) - 8)
+    else:
+        _, _, _, inst_end = parse_units_arrays(blobs[k])
+        assert len(blobs[k]) > inst_end  # the row has literal bytes to cut
+        blobs[k] = blobs[k][:-1]
+    with pytest.raises(CorruptBlockError):
+        delta.gdelta_rows_decode(_join_payload(blobs), base)
+
+
+def test_rewritten_payload_still_decodes():
+    """The corruption helpers change only what they target: a rewrite that
+    keeps every copy offset, and an untouched split/join, decode intact."""
+    from gdelta_spark.codecs import delta
+    from gdelta_spark.fixtures import make_tokens
+
+    for regime in ("near-dup", "texty"):
+        arrays = [make_tokens(7, regime, i) for i in range(13)]
+        base = arrays[0].astype("<i4").tobytes()
+        blobs = _split_payload(delta.gdelta_rows_payload(arrays[1:], base))
+        flags, _, offsets, _ = parse_units_arrays(blobs[6])
+        first = int(offsets[np.flatnonzero(flags == 1)[0]])
+        blobs[6] = _rewrite_first_copy(blobs[6], first)
+        out = delta.gdelta_rows_decode(_join_payload(blobs), base)
+        assert all(np.array_equal(a, b) for a, b in zip(out, arrays[1:]))
+
+
+def test_truncated_payload_raises():
+    """A payload cut short inside its last row is corrupt, not a short row."""
+    from gdelta_spark.codecs import delta
+    from gdelta_spark.codecs.core import CorruptBlockError
+    from gdelta_spark.fixtures import make_tokens
+
+    arrays = [make_tokens(7, "near-dup", i) for i in range(4)]
+    base = arrays[0].astype("<i4").tobytes()
+    payload = delta.gdelta_rows_payload(arrays[1:], base)
+    with pytest.raises(CorruptBlockError):
+        delta.gdelta_rows_decode(payload[:-1], base)

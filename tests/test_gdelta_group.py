@@ -1,6 +1,6 @@
-"""Differential tests for the lockstep batched group encoder: its blobs must
-be byte-identical to the single-row encoder's (and therefore, transitively
-via test_gdelta_codec's oracle parity, to the C++ reference's)."""
+"""Differential tests for the group encoder: its blobs must be byte-identical
+to the single-row oracle's (tests/gdelta_oracle.py, a plain transcription of
+the C++ reference encoder), whatever the group's size and make-up."""
 
 from __future__ import annotations
 
@@ -9,11 +9,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from gdelta_spark.codecs.gdelta_codec import (
-    BaseIndex,
-    gdelta_decode,
-    gdelta_encode,
-)
+from gdelta_oracle import gdelta_encode
+
+from gdelta_spark.codecs.gdelta_codec import BaseIndex, gdelta_decode
 from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
 from gdelta_spark.fixtures import REGIMES, base_sequence, make_tokens
 
@@ -25,7 +23,7 @@ def test_group_matches_single_per_regime(regime):
         np.asarray(make_tokens(7, regime, i), np.int32).tobytes()
         for i in range(40)
     ]
-    grp = gdelta_encode_group(rows, base, BaseIndex(base))
+    grp = gdelta_encode_group(rows, base)
     for i, (g, r) in enumerate(zip(grp, rows)):
         assert g == gdelta_encode(r, base), f"{regime} row {i}"
         assert gdelta_decode(g, base) == r
@@ -42,7 +40,7 @@ def test_group_edge_rows():
         b"\x00" * 4000,  # no match anywhere
         base[200:300] + b"XYZ" + base[300:1200],
     ]
-    grp = gdelta_encode_group(rows, base, BaseIndex(base))
+    grp = gdelta_encode_group(rows, base)
     for i, (g, r) in enumerate(zip(grp, rows)):
         assert g == gdelta_encode(r, base), i
         assert gdelta_decode(g, base) == r
@@ -51,7 +49,7 @@ def test_group_edge_rows():
 def test_group_tiny_and_empty_base():
     for base in (b"", b"ab", b"x" * 40):
         rows = [b"", b"hello world hello world!", base * 3]
-        grp = gdelta_encode_group(rows, base, BaseIndex(base) if base else None)
+        grp = gdelta_encode_group(rows, base)
         for i, (g, r) in enumerate(zip(grp, rows)):
             assert g == gdelta_encode(r, base), (len(base), i)
             assert gdelta_decode(g, base) == r
@@ -88,16 +86,15 @@ def group_case(draw):
 @given(case=group_case())
 def test_group_matches_single_fuzz(case):
     base, rows = case
-    grp = gdelta_encode_group(rows, base, BaseIndex(base) if base else None)
+    grp = gdelta_encode_group(rows, base)
     for g, r in zip(grp, rows):
         assert g == gdelta_encode(r, base)
         assert gdelta_decode(g, base) == r
 
 
 def test_rows_payload_uses_group_encoder_and_matches_single():
-    """The pipeline payload builder must produce the same bytes whichever
-    encoder path builds it (wiring regression: delta.gdelta_rows_payload
-    routes multi-row groups through gdelta_encode_group)."""
+    """The pipeline payload builder's per-row blobs are the oracle's, for a
+    group and for a single row."""
     import struct
 
     import numpy as np
@@ -109,11 +106,12 @@ def test_rows_payload_uses_group_encoder_and_matches_single():
     base = np.asarray(base_sequence(3, "near-dup"), np.int32).tobytes()
     arrays = [np.asarray(make_tokens(3, "near-dup", i), np.int32) for i in range(12)]
     rows = [a.astype("<i4").tobytes() for a in arrays]
-    payload = delta.gdelta_rows_payload(arrays, base, rows_bytes=rows)
-    blobs = [gdelta_encode(r, base) for r in rows]
-    lens = np.array([len(b) for b in blobs], dtype=np.int64)
-    want = struct.pack("<I", len(blobs)) + _pack_for(lens) + b"".join(blobs)
-    assert payload == want
+    for n in (12, 1):
+        payload = delta.gdelta_rows_payload(arrays[:n], base, rows_bytes=rows[:n])
+        blobs = [gdelta_encode(r, base) for r in rows[:n]]
+        lens = np.array([len(b) for b in blobs], dtype=np.int64)
+        want = struct.pack("<I", len(blobs)) + _pack_for(lens) + b"".join(blobs)
+        assert payload == want
 
 
 def test_dense_global_winner_equals_searchsorted(monkeypatch):
@@ -127,8 +125,8 @@ def test_dense_global_winner_equals_searchsorted(monkeypatch):
             make_tokens(7, regime, i).astype("<i4").tobytes() for i in range(12)
         ]
         base = rows[0]
-        dense = gdelta_encode_group(rows, base, BaseIndex(base))
+        dense = gdelta_encode_group(rows, base)
         monkeypatch.setattr(BaseIndex, "_DENSE_MAX_BIT", -1)
-        plain = gdelta_encode_group(rows, base, BaseIndex(base))
+        plain = gdelta_encode_group(rows, base)
         monkeypatch.undo()
         assert dense == plain, regime

@@ -14,7 +14,12 @@ from hypothesis import strategies as st
 
 from gdelta_spark import codecs
 from gdelta_spark.codecs import core
-from gdelta_spark.codecs.gdelta_codec import gdelta_decode, gdelta_encode
+from gdelta_spark.codecs.gdelta_codec import gdelta_decode
+from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
+
+
+def gdelta_encode(target: bytes, base: bytes) -> bytes:
+    return gdelta_encode_group([target], base)[0]
 
 byte_blobs = st.binary(min_size=0, max_size=3000)
 
