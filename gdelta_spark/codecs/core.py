@@ -40,7 +40,6 @@ CODEC_NAMES = {
 CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 
 
-
 class CorruptBlockError(ValueError):
     """A block payload is malformed: decoding it would read outside its base
     or its own bytes, so it cannot yield the rows that were written."""
