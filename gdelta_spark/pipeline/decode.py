@@ -1,28 +1,30 @@
 """Decode + verify jobs: encoded blocks -> tokens; equality check vs source.
 
-Decode is one ``applyInPandas`` per part_id group: the 'base' bootstrap
-blocks (block_id < 0, one per gdelta-coded cluster) are decoded first, then
-every data block against its named base. Verify
+Decode is one ``applyInArrow`` per part_id group (``pa.Table`` in and out):
+the 'base' bootstrap blocks (block_id < 0, one per gdelta-coded cluster) are
+decoded first, then every data block against its named base. Verify
 joins decoded rows to the original table and asserts token-array equality —
 the reference's own round-trip test lifted to table scale
 (/root/reference/test.sh:8-24)."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from gdelta_spark import blocks
+from gdelta_spark.codecs.core import CorruptBlockError
 from gdelta_spark.codecs.delta import tokens_to_bytes
 
 DECODED_SCHEMA = "doc_id string, tok_bytes binary"
 
 
-def _decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("block_id", ignore_index=True)
-    base_rows = pdf[pdf["block_id"] < 0]
+def _decode_group(blks: pa.Table) -> pa.Table:
+    """The blocks of one part_id -> its (doc_id, tok_bytes) rows."""
+    cols = (blks.column(c).to_pylist() for c in ("block_id", "base_doc_id", "doc_ids", "blob"))
+    rows = sorted(zip(*cols), key=lambda r: r[0])
     # one bootstrap block per gdelta-coded cluster (encode.py), replayed in
     # EMISSION order (block_id -1, -2, ... i.e. reversed after the ascending
     # sort): a CHAINED bootstrap names its parent via base_doc_id (already
@@ -31,24 +33,27 @@ def _decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
     # point, so base=None and the blob decodes standalone. Data blocks name
     # their base via base_doc_id; non-delta blocks never read one.
     bases: dict[str, bytes] = {}
-    for bd, ids, blob in zip(
-        base_rows["base_doc_id"][::-1], base_rows["doc_ids"][::-1],
-        base_rows["blob"][::-1],
-    ):
-        arr = blocks.decode_block_rows(bytes(blob), base=bases.get(bd))[0]
-        bases[list(ids)[0]] = tokens_to_bytes(arr)
+    for block_id, bd, ids, blob in reversed(rows):
+        if block_id < 0:
+            arr = blocks.decode_block_rows(blob, base=bases.get(bd))[0]
+            bases[ids[0]] = tokens_to_bytes(arr)
 
     out_ids: list[str] = []
     out_bytes: list[bytes] = []
-    data = pdf[pdf["block_id"] >= 0]
-    for blob, ids, bd in zip(data["blob"], data["doc_ids"], data["base_doc_id"]):
-        arrays = blocks.decode_block_rows(bytes(blob), base=bases.get(bd))
-        ids = list(ids)
+    for block_id, bd, ids, blob in rows:
+        if block_id < 0:
+            continue
+        arrays = blocks.decode_block_rows(blob, base=bases.get(bd))
         if len(ids) != len(arrays):
-            raise ValueError("doc_ids/rows mismatch in block")
+            raise CorruptBlockError(
+                f"block {block_id}: {len(ids)} doc_ids for {len(arrays)} decoded rows"
+            )
         out_ids.extend(ids)
         out_bytes.extend(a.astype("<i4", copy=False).tobytes() for a in arrays)
-    return pd.DataFrame({"doc_id": out_ids, "tok_bytes": out_bytes})
+    return pa.table({
+        "doc_id": pa.array(out_ids, pa.string()),
+        "tok_bytes": pa.array(out_bytes, pa.binary()),
+    })
 
 
 def decode_tokens_bytes(blocks_df: DataFrame) -> DataFrame:
@@ -63,7 +68,7 @@ def decode_tokens_bytes(blocks_df: DataFrame) -> DataFrame:
     return (
         blocks_df.repartition(n_kernel, "part_id")
         .groupBy("part_id")
-        .applyInPandas(_decode_group, schema=DECODED_SCHEMA)
+        .applyInArrow(_decode_group, schema=DECODED_SCHEMA)
     )
 
 
@@ -94,41 +99,32 @@ def verify_partition_local(salted_bin_df: DataFrame, blocks_df: DataFrame) -> Da
     100 TB-scale variant (SCALE.md). Returns (part_id, n_rows, n_ok)."""
     src = salted_bin_df.select("part_id", "doc_id", "tok_bytes")
 
-    def cmp(src_pdf: pd.DataFrame, blk_pdf: pd.DataFrame) -> pd.DataFrame:
-        part = (
-            src_pdf["part_id"].iloc[0]
-            if len(src_pdf)
-            else blk_pdf["part_id"].iloc[0]
-        )
-        if len(blk_pdf) == 0:
-            return pd.DataFrame(
-                {"part_id": [part], "n_rows": [len(src_pdf)], "n_ok": [0]}
-            )
-        decoded = _decode_group(blk_pdf)
-        # positional compare after sorting both sides by doc_id: duplicate
-        # doc_ids verify each occurrence against its own decoded payload
-        # instead of dict-collapsing to the last one (round-1 advice)
-        src_ids = src_pdf["doc_id"].tolist()
-        src_b = [bytes(b) for b in src_pdf["tok_bytes"]]
-        dec_ids = decoded["doc_id"].tolist()
-        dec_b = decoded["tok_bytes"].tolist()
-        s_order = sorted(range(len(src_ids)), key=lambda i: src_ids[i])
-        d_order = sorted(range(len(dec_ids)), key=lambda i: dec_ids[i])
+    def cmp(src_rows: pa.Table, blks: pa.Table) -> pa.Table:
+        part = (src_rows if src_rows.num_rows else blks).column("part_id")[0]
+        decoded = _decode_group(blks)
         ok = 0
-        if len(s_order) == len(d_order):
-            ok = sum(
-                1
-                for i, j in zip(s_order, d_order)
-                if src_ids[i] == dec_ids[j] and src_b[i] == dec_b[j]
+        if decoded.num_rows == src_rows.num_rows:
+            # positional compare after a stable sort of both sides by doc_id:
+            # duplicate doc_ids verify each occurrence against its own
+            # decoded payload instead of collapsing to the last one
+            s, d = src_rows.sort_by("doc_id"), decoded.sort_by("doc_id")
+            same = pc.and_(
+                pc.equal(s.column("doc_id"), d.column("doc_id")),
+                pc.equal(s.column("tok_bytes"), d.column("tok_bytes")),
             )
-        return pd.DataFrame(
-            {"part_id": [part], "n_rows": [len(src_pdf)], "n_ok": [ok]}
-        )
+            ok = pc.sum(same).as_py() or 0
+        # decoded rows the source lacks count as rows too, so a part with
+        # blocks and no source rows reports mismatches, as the full join does
+        return pa.table({
+            "part_id": pa.array([part.as_py()], pa.string()),
+            "n_rows": pa.array([max(src_rows.num_rows, decoded.num_rows)], pa.int64()),
+            "n_ok": pa.array([ok], pa.int64()),
+        })
 
     return (
         src.groupBy("part_id")
         .cogroup(blocks_df.groupBy("part_id"))
-        .applyInPandas(cmp, schema="part_id string, n_rows long, n_ok long")
+        .applyInArrow(cmp, schema="part_id string, n_rows long, n_ok long")
     )
 
 

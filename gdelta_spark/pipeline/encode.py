@@ -1,7 +1,8 @@
 """Encode job: tokens DataFrame -> encoded-blocks DataFrame.
 
-The kernel is one ``applyInPandas`` per (source, bucket, salt) group — rows
-arrive as an Arrow batch, all work is numpy (SURVEY §3.2). Per group:
+The kernel is one ``applyInArrow`` per (source, bucket, salt) group — the
+group arrives as one ``pa.Table`` and leaves as one, all work is numpy
+(SURVEY §3.2). Per group:
 
 1. sort rows by doc_id (determinism: base election and block boundaries are
    order-independent),
@@ -19,24 +20,29 @@ arrive as an Arrow batch, all work is numpy (SURVEY §3.2). Per group:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from gdelta_spark import blocks
 from gdelta_spark.codecs import core
-from gdelta_spark.codecs.delta import tokens_to_bytes
 from gdelta_spark.pipeline import partitioning
 
 BLOCK_TOKENS = 1 << 19  # ~2 MiB serialized per block
 
-BLOCKS_SCHEMA = (
-    "part_id string, block_id int, codec string, base_doc_id string, "
-    "doc_ids array<string>, n_rows int, n_tokens long, "
-    "raw_bytes long, enc_bytes long, blob binary"
-)
+# one schema for the kernel's output and the committed blocks file. Every
+# integer is int64: committed warehouses hold int64 columns, and Spark cannot
+# read one column as int32 in some files and int64 in others. BLOCKS_SCHEMA
+# is its Spark form.
+BLOCKS_ARROW_SCHEMA = pa.schema([
+    ("part_id", pa.string()), ("block_id", pa.int64()), ("codec", pa.string()),
+    ("base_doc_id", pa.string()), ("doc_ids", pa.list_(pa.string())),
+    ("n_rows", pa.int64()), ("n_tokens", pa.int64()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("blob", pa.binary()),
+])
+BLOCKS_SCHEMA = from_arrow_schema(BLOCKS_ARROW_SCHEMA)
 
 
 _SIG_MULT_1 = np.uint64(0x9E3779B97F4A7C15)
@@ -136,14 +142,19 @@ def _cluster_rows(rows_bytes: list[bytes]) -> list[list[int]]:
     return clusters
 
 
-def _encode_group(pdf: pd.DataFrame, force_codec: int | None = None) -> pd.DataFrame:
-    pdf = pdf.sort_values("doc_id", kind="mergesort", ignore_index=True)
-    part_id = pdf["part_id"].iloc[0]
+def _encode_group(rows: pa.Table, force_codec: int | None = None) -> pa.Table:
+    """(part_id, doc_id, tok_bytes) rows of one group -> its blocks
+    (BLOCKS_ARROW_SCHEMA)."""
+    # stable sort: rows with equal doc_ids keep their arrival order
+    order = pc.sort_indices(rows, sort_keys=[("doc_id", "ascending")]).to_pylist()
+    part_id = rows.column("part_id")[0].as_py()
     # rows arrive pre-serialized (binary cells — see serde.py); token arrays
     # are zero-copy views over them
-    rows_bytes = [bytes(c) for c in pdf["tok_bytes"]]
+    ids = rows.column("doc_id").to_pylist()
+    payloads = rows.column("tok_bytes").to_pylist()
+    doc_ids = [ids[i] for i in order]
+    rows_bytes = [payloads[i] for i in order]
     arrays = [np.frombuffer(c, dtype="<i4") for c in rows_bytes]
-    doc_ids = pdf["doc_id"].tolist()
 
     # ONE full chooser per group (estimates + FSST measurement are the
     # expensive part); clusters then pay only a tiny bounded delta probe to
@@ -298,12 +309,9 @@ def _encode_group(pdf: pd.DataFrame, force_codec: int | None = None) -> pd.DataF
             block_id += 1
             i = j
 
-    return pd.DataFrame(
-        out,
-        columns=[
-            "part_id", "block_id", "codec", "base_doc_id", "doc_ids",
-            "n_rows", "n_tokens", "raw_bytes", "enc_bytes", "blob",
-        ],
+    return pa.Table.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(zip(*out), BLOCKS_ARROW_SCHEMA)],
+        schema=BLOCKS_ARROW_SCHEMA,
     )
 
 
@@ -321,9 +329,6 @@ def encode_blocks_bin(
         bin_df, group_bytes or partitioning.DEFAULT_GROUP_BYTES, stats_df=stats_df
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _encode_group(pdf, force_codec=force_codec)
-
     # explicit partition count for the kernel exchange: the Python encode
     # kernel runs at ~0.05 GB/s/core, so its stage wants MANY partitions,
     # while AQE's size-based coalescing (tuned for JVM stages) would merge
@@ -337,7 +342,7 @@ def encode_blocks_bin(
         salted.select("part_id", "doc_id", "tok_bytes")
         .repartition(n_kernel, "part_id")
         .groupBy("part_id")
-        .applyInPandas(kernel, schema=BLOCKS_SCHEMA)
+        .applyInArrow(lambda rows: _encode_group(rows, force_codec), schema=BLOCKS_SCHEMA)
     )
 
 

@@ -1,6 +1,6 @@
 """Skew-aware partitioning: n_tok buckets + salting.
 
-One 10^6-token row in an ``applyInPandas`` group stalls the whole group (AQE
+One 10^6-token row in an ``applyInArrow`` group stalls the whole group (AQE
 cannot split a Python-UDF group), so skew is handled explicitly, as the north
 rule demands: rows are bucketed by floor(log2(n_tok)) and each (source,
 bucket) is salted so that expected group payload stays under a byte budget.

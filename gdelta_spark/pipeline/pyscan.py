@@ -20,62 +20,56 @@ import glob
 import os
 from typing import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from gdelta_spark.pipeline.serde import (
-    TOK_BYTES_COL,
-    _list_chunk_to_binary,
-    capped_token_batches,
-)
+from gdelta_spark.pipeline.serde import TOK_BYTES_COL, binary_batches
 
 SCAN_SCHEMA = f"doc_id string, n_tok int, source string, {TOK_BYTES_COL} binary"
+
+
+class UnreadableParquetError(ValueError):
+    """A parquet file of the scanned input has no readable footer."""
 
 
 def _plan_splits(path: str) -> list[tuple[str, int]]:
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if not files and os.path.isfile(path):
+        files = [path]
     splits: list[tuple[str, int]] = []
     for f in files:
         try:
             n_rg = pq.ParquetFile(f).metadata.num_row_groups
-        except Exception:
-            continue
+        except (OSError, pa.ArrowException) as exc:
+            raise UnreadableParquetError(f"unreadable parquet file {f}: {exc}") from exc
         splits.extend((f, rg) for rg in range(n_rg))
     return splits
 
 
 def scan_tokens_binary(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet tokens table -> DataFrame(doc_id, n_tok, source, tok_bytes)."""
+    """Parquet tokens table -> DataFrame(doc_id, n_tok, source, tok_bytes).
+
+    One task per (file, row group) split: a bare ``Range`` of split indexes,
+    one per partition, read by a ``mapInArrow`` that indexes the captured
+    split list (no Python stage or shuffle to distribute the splits)."""
     splits = _plan_splits(path)
     if not splits:
         raise FileNotFoundError(f"no parquet row groups under {path}")
-    sdf = spark.createDataFrame(splits, "path string, rg int").repartition(
-        len(splits), "path", "rg"
-    )
 
     def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         for rb in batches:
-            paths = rb.column("path").to_pylist()
-            rgs = rb.column("rg").to_pylist()
-            for f, rg in zip(paths, rgs):
-                pf = pq.ParquetFile(f)
-                tbl = pf.read_row_group(rg, columns=["doc_id", "tokens", "n_tok", "source"])
+            for i in rb.column("id").to_pylist():
+                f, rg = splits[i]
+                tbl = pq.ParquetFile(f).read_row_group(
+                    rg, columns=["doc_id", "tokens", "n_tok", "source"]
+                )
+                n_tok = tbl.schema.get_field_index("n_tok")
+                tbl = tbl.set_column(n_tok, "n_tok", tbl.column(n_tok).cast(pa.int32()))
                 for batch in tbl.to_batches():
-                    for sub in capped_token_batches(batch):
-                        yield pa.RecordBatch.from_pydict(
-                            {
-                                "doc_id": sub.column("doc_id"),
-                                "n_tok": sub.column("n_tok").cast(pa.int32()),
-                                "source": sub.column("source"),
-                                TOK_BYTES_COL: _list_chunk_to_binary(
-                                    sub.column("tokens")
-                                ),
-                            }
-                        )
+                    yield from binary_batches(batch, ("doc_id", "n_tok", "source"))
 
-    return sdf.mapInArrow(read, SCAN_SCHEMA)
+    return spark.range(len(splits), numPartitions=len(splits)).mapInArrow(read, SCAN_SCHEMA)

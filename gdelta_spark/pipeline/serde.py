@@ -97,6 +97,15 @@ def capped_token_batches(
         s = j
 
 
+def binary_batches(rb: pa.RecordBatch, keep: tuple[str, ...]) -> Iterator[pa.RecordBatch]:
+    """``keep`` columns of ``rb`` plus ``tok_bytes`` in place of ``tokens``,
+    in capped slices (see capped_token_batches)."""
+    for sub in capped_token_batches(rb):
+        cols = {c: sub.column(c) for c in keep}
+        cols[TOK_BYTES_COL] = _list_chunk_to_binary(sub.column("tokens"))
+        yield pa.RecordBatch.from_pydict(cols)
+
+
 def _binary_chunk_to_list(arr: pa.Array) -> pa.Array:
     """BinaryArray -> ListArray<int32> (byte offsets /4 over the same data)."""
     if isinstance(arr, pa.ChunkedArray):
@@ -126,10 +135,7 @@ def serialize_tokens(df: DataFrame, keep: tuple[str, ...] = ("part_id", "doc_id"
 
     def ser(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            for sub in capped_token_batches(rb):
-                cols = {c: sub.column(c) for c in keep}
-                cols[TOK_BYTES_COL] = _list_chunk_to_binary(sub.column("tokens"))
-                yield pa.RecordBatch.from_pydict(cols)
+            yield from binary_batches(rb, keep)
 
     return df.select(*keep, "tokens").mapInArrow(ser, out_schema)
 

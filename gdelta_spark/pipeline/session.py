@@ -36,7 +36,7 @@ def get_spark(
         # ~#cores reduce tasks, so a query tree of K exchanges schedules
         # K * cores near-empty tasks (guide §2.2: fewer, larger partitions).
         # The advisory target is parameterised: 8 MiB locally keeps the
-        # Python-kernel stages (applyInPandas encode, ~0.05 GB/s/core)
+        # Python-kernel stages (applyInArrow encode, ~0.05 GB/s/core)
         # parallel at bench scale — partition count stays ceil(bytes/8MiB),
         # which GROWS with input size; a production cluster raises it to
         # 64-256 MiB for JVM-only shuffle-heavy jobs (same knob, env).

@@ -21,6 +21,9 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,14 +84,16 @@ def part_keys(salted_narrow_df: DataFrame) -> DataFrame:
     )
 
 
-def content_md5(doc_ids: list[str], payloads: list) -> str:
+def content_md5(rows: pa.Table) -> str:
     """Payload integrity of one partition, from the exact bytes being encoded
-    (no extra scan): md5 over (doc_id, tok_bytes) in doc_id order, rows with
-    equal doc_ids in input order (one stable sort)."""
+    (no extra scan): md5 over the (doc_id, tok_bytes) rows of a ``pa.Table``
+    in doc_id order, rows with equal doc_ids in input order (one stable
+    sort)."""
+    ids, payloads = (rows.column(c).to_pylist() for c in ("doc_id", "tok_bytes"))
     h = hashlib.md5()
-    for i in sorted(range(len(doc_ids)), key=doc_ids.__getitem__):
-        h.update(doc_ids[i].encode())
-        h.update(bytes(payloads[i]))
+    for i in pc.sort_indices(rows, sort_keys=[("doc_id", "ascending")]).to_pylist():
+        h.update(ids[i].encode())
+        h.update(payloads[i])
     return h.hexdigest()
 
 
@@ -134,8 +139,6 @@ class Warehouse:
         path = self._table_path()
         if not os.path.exists(path):
             return {}
-        import pyarrow.parquet as pq
-
         rows = pq.read_table(path).to_pylist()
         return {m["part_id"]: m for m in rows}
 
@@ -150,9 +153,6 @@ class Warehouse:
         table. Atomic (write-temp + rename), then remove exactly the JSONs
         that were folded — a commit racing the fold survives as JSON and
         wins the merge until the next compaction."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         jsons = self._json_manifests()
         if not jsons:
             return {"folded": 0, "total": len(self._table_manifests())}
@@ -181,9 +181,6 @@ class Warehouse:
         table = self._table_manifests()
         keep = {k: v for k, v in table.items() if k not in part_ids}
         if len(keep) != len(table):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
             tmp = self._table_path() + f".tmp-{uuid.uuid4().hex[:8]}"
             if keep:
                 pq.write_table(
@@ -265,8 +262,6 @@ class Warehouse:
         n = len(_glob.glob(os.path.join(self.manifest_dir, "*.json")))
         path = self._table_path()
         if os.path.exists(path):
-            import pyarrow.parquet as pq
-
             n += pq.ParquetFile(path).metadata.num_rows
         return n
 
@@ -294,15 +289,13 @@ class Warehouse:
 
     # -- commit -------------------------------------------------------------
 
-    def commit_partition(self, part_id: str, pdf_blocks, manifest: dict) -> None:
-        """Atomic per-partition commit: parquet to temp, rename, then write
-        the manifest (manifest presence == committed)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+    def commit_partition(self, part_id: str, blocks_table: pa.Table, manifest: dict) -> None:
+        """Atomic per-partition commit: the blocks ``pa.Table`` to a temp
+        parquet file, rename, then write the manifest (manifest presence ==
+        committed)."""
         final = os.path.join(self.blocks_dir, _safe(part_id) + ".parquet")
         tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
-        pq.write_table(pa.Table.from_pandas(pdf_blocks), tmp, compression="zstd")
+        pq.write_table(blocks_table, tmp, compression="zstd")
         os.replace(tmp, final)
 
         mf = os.path.join(self.manifest_dir, _mname(part_id))
@@ -366,7 +359,7 @@ def encode_and_commit(
 ) -> dict:
     """Full encode pipeline with checkpoint/resume: salt -> pending keys
     -> encode kernel -> per-partition atomic commit (inside the same Spark
-    stage via a second applyInPandas that writes from the executor).
+    stage: the commit kernel's ``applyInArrow`` writes from the executor).
 
     ``tokens``: a tokens DataFrame (array<int> or pre-serialized binary) or a
     parquet path (read Python-natively — the fast path at scale, see pyscan).
@@ -432,53 +425,45 @@ def encode_and_commit(
     # manifests are written without any driver-side lookup table
     work = salted.join(F.broadcast(pending), "part_id")
 
-    import pandas as pd
-
     snapshot = f"snap-{int(time.time() * 1000)}"
-    root_b = root  # closure capture
 
-    def encode_commit_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = pdf["part_id"].iloc[0]
-        out = encode_mod._encode_group(pdf)
-        wh_local = Warehouse(root_b)
-        data = out[out["block_id"] >= 0]
-        key_hash = int(pdf["key_hash"].iloc[0])
-        key_sum = int(pdf["key_sum"].iloc[0])
-        input_rows = int(pdf["input_rows"].iloc[0])
+    def encode_commit_group(rows: pa.Table) -> pa.Table:
+        part_id, key_hash, key_sum, input_rows = (
+            rows.column(c)[0].as_py() for c in ("part_id", "key_hash", "key_sum", "input_rows")
+        )
+        out = encode_mod._encode_group(rows)
+        data = out.filter(pc.greater_equal(out.column("block_id"), 0))
+        sums = {
+            c: pc.sum(data.column(c)).as_py()
+            for c in ("n_rows", "n_tokens", "raw_bytes", "enc_bytes")
+        }
         manifest = {
             "part_id": part_id,
             "key_hash": key_hash,
             "key_sum": key_sum,
             "input_rows": input_rows,
-            "content_md5": content_md5(pdf["doc_id"].tolist(), pdf["tok_bytes"].tolist()),
+            "content_md5": content_md5(rows),
             "snapshot": snapshot,
-            "n_rows": int(data["n_rows"].sum()),
-            "n_tokens": int(data["n_tokens"].sum()),
-            "raw_bytes": int(data["raw_bytes"].sum()),
-            "enc_bytes": int(data["enc_bytes"].sum()),
-            "base_doc_id": out["base_doc_id"].iloc[0],
-            "codecs": sorted(set(data["codec"])),
-            "n_blocks": int(len(data)),
+            **sums,
+            "base_doc_id": out.column("base_doc_id")[0].as_py(),
+            "codecs": sorted(set(data.column("codec").to_pylist())),
+            "n_blocks": data.num_rows,
             "committed_at": time.time(),
         }
         if manifest["n_rows"] != input_rows:
             raise ValueError(f"{part_id}: row count drift {manifest['n_rows']} vs {input_rows}")
-        wh_local.commit_partition(part_id, out, manifest)
-        return pd.DataFrame(
-            {
-                "part_id": [part_id],
-                "n_rows": [manifest["n_rows"]],
-                "raw_bytes": [manifest["raw_bytes"]],
-                "enc_bytes": [manifest["enc_bytes"]],
-            }
-        )
+        Warehouse(root).commit_partition(part_id, out, manifest)
+        return pa.table({
+            "part_id": pa.array([part_id], pa.string()),
+            **{c: pa.array([sums[c]], pa.int64()) for c in ("n_rows", "raw_bytes", "enc_bytes")},
+        })
 
     summary_df = (
         work.select(
             "part_id", "key_hash", "key_sum", "input_rows", "doc_id", "tok_bytes"
         )
         .groupBy("part_id")
-        .applyInPandas(
+        .applyInArrow(
             encode_commit_group,
             schema="part_id string, n_rows long, raw_bytes long, enc_bytes long",
         )

@@ -66,21 +66,22 @@ def test_chained_base_bootstrap_roundtrip():
     base when smaller (near-dup groups split by the signature grid chain at
     ~90x); decode replays bases in emission order and must reproduce every
     row bit-identically."""
-    import pandas as pd
+    import pyarrow as pa
 
     from gdelta_spark import fixtures
     from gdelta_spark.pipeline.decode import _decode_group
     from gdelta_spark.pipeline.encode import _encode_group
 
     rows = list(fixtures.rows(1, "near-dup", 400))
-    pdf = pd.DataFrame(
+    table = pa.table(
         {
             "part_id": ["p"] * len(rows),
             "doc_id": [r[0] for r in rows],
-            "tok_bytes": [r[1].astype("<i4").tobytes() for r in rows],
+            "tok_bytes": pa.array([r[1].astype("<i4").tobytes() for r in rows], pa.binary()),
         }
     )
-    out = _encode_group(pdf)
+    out_table = _encode_group(table)
+    out = out_table.to_pandas()
     base_rows = out[out["block_id"] < 0]
     chained = [
         (bd, list(ids)[0])
@@ -88,7 +89,7 @@ def test_chained_base_bootstrap_roundtrip():
         if bd != list(ids)[0]
     ]
     assert chained, "expected at least one chained base in the near-dup group"
-    dec = _decode_group(out)
+    dec = _decode_group(out_table).to_pandas()
     got = dict(zip(dec["doc_id"], (bytes(b) for b in dec["tok_bytes"])))
     for r in rows:
         assert got[r[0]] == r[1].astype("<i4").tobytes()
@@ -101,21 +102,21 @@ def test_bootstrap_blocks_pick_best_light_codec():
     can be ~1.7x larger there (round-5 regression caught in A/B). The
     emitted base blob must be no larger than ANY single light-codec
     encoding of the same row."""
-    import pandas as pd
+    import pyarrow as pa
 
     from gdelta_spark import fixtures
     from gdelta_spark.pipeline.encode import _encode_group
 
     rows = list(fixtures.rows(42, "near-dup", 64))
-    pdf = pd.DataFrame(
+    table = pa.table(
         {
             "part_id": ["p"] * len(rows),
             "doc_id": [r[0] for r in rows],
-            "tok_bytes": [r[1].astype("<i4").tobytes() for r in rows],
+            "tok_bytes": pa.array([r[1].astype("<i4").tobytes() for r in rows], pa.binary()),
         }
     )
     by_id = {r[0]: r[1] for r in rows}
-    out = _encode_group(pdf)
+    out = _encode_group(table).to_pandas()
     base_rows = out[out["block_id"] < 0]
     assert len(base_rows)
     for _, row in base_rows.iterrows():
