@@ -142,18 +142,21 @@ def _cluster_rows(rows_bytes: list[bytes]) -> list[list[int]]:
     return clusters
 
 
+def sorted_rows(rows: pa.Table) -> tuple[list[str], list[bytes]]:
+    """(doc_ids, tok_bytes) of a group in doc_id order; the sort is stable,
+    so rows with equal doc_ids keep their arrival order."""
+    order = pc.sort_indices(rows, sort_keys=[("doc_id", "ascending")]).to_pylist()
+    ids, payloads = (rows.column(c).to_pylist() for c in ("doc_id", "tok_bytes"))
+    return [ids[i] for i in order], [payloads[i] for i in order]
+
+
 def _encode_group(rows: pa.Table, force_codec: int | None = None) -> pa.Table:
     """(part_id, doc_id, tok_bytes) rows of one group -> its blocks
     (BLOCKS_ARROW_SCHEMA)."""
-    # stable sort: rows with equal doc_ids keep their arrival order
-    order = pc.sort_indices(rows, sort_keys=[("doc_id", "ascending")]).to_pylist()
     part_id = rows.column("part_id")[0].as_py()
     # rows arrive pre-serialized (binary cells — see serde.py); token arrays
     # are zero-copy views over them
-    ids = rows.column("doc_id").to_pylist()
-    payloads = rows.column("tok_bytes").to_pylist()
-    doc_ids = [ids[i] for i in order]
-    rows_bytes = [payloads[i] for i in order]
+    doc_ids, rows_bytes = sorted_rows(rows)
     arrays = [np.frombuffer(c, dtype="<i4") for c in rows_bytes]
 
     # ONE full chooser per group (estimates + FSST measurement are the

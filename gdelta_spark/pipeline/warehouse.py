@@ -87,13 +87,11 @@ def part_keys(salted_narrow_df: DataFrame) -> DataFrame:
 def content_md5(rows: pa.Table) -> str:
     """Payload integrity of one partition, from the exact bytes being encoded
     (no extra scan): md5 over the (doc_id, tok_bytes) rows of a ``pa.Table``
-    in doc_id order, rows with equal doc_ids in input order (one stable
-    sort)."""
-    ids, payloads = (rows.column(c).to_pylist() for c in ("doc_id", "tok_bytes"))
+    in the encode kernel's order (``encode.sorted_rows``)."""
     h = hashlib.md5()
-    for i in pc.sort_indices(rows, sort_keys=[("doc_id", "ascending")]).to_pylist():
-        h.update(ids[i].encode())
-        h.update(payloads[i])
+    for doc_id, payload in zip(*encode_mod.sorted_rows(rows)):
+        h.update(doc_id.encode())
+        h.update(payload)
     return h.hexdigest()
 
 
