@@ -19,6 +19,7 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gdelta_spark.ops import ann, dedup, multimodal, textstats
 from gdelta_spark.pipeline.session import input_table, sorted_small
 
 SALT_BUDGET_BYTES = 1 << 20  # small so sf0.01 actually exercises salting
@@ -326,102 +327,6 @@ def _q_fixture_regimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return summary.crossJoin(ok).orderBy("source")
 
 
-def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import ann
-
-    return ann.ann_topk(spark, sf_dir)
-
-
-def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import ann
-
-    return ann.ann_lsh_best_pairs(spark, sf_dir)
-
-
-def _q_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import dedup
-
-    return dedup.neardup_pairs(spark, sf_dir)
-
-
-def _q_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import dedup
-
-    return dedup.neardup_keep(spark, sf_dir)
-
-
-def _q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import dedup
-
-    return dedup.neardup_components(spark, sf_dir)
-
-
-def _q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import dedup
-
-    return dedup.dedup_keep(spark, sf_dir)
-
-
-def _q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import dedup
-
-    return dedup.doc_fingerprints(spark, sf_dir)
-
-
-def _q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import textstats
-
-    return textstats.token_counts(spark, sf_dir)
-
-
-def _q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import textstats
-
-    return textstats.lang_confusion(spark, sf_dir)
-
-
-def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import ann
-
-    return ann.ann_ivf_topk(spark, sf_dir)
-
-
-def _q_simhash_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import dedup
-
-    return dedup.simhash_text(spark, sf_dir)
-
-
-def _q_quality_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import textstats
-
-    return textstats.quality_ratios(spark, sf_dir)
-
-
-def _q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import multimodal
-
-    return multimodal.multimodal_stats(spark, sf_dir)
-
-
-def _q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import multimodal
-
-    return multimodal.multimodal_frames(spark, sf_dir)
-
-
-def _q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import multimodal
-
-    return multimodal.multimodal_resize(spark, sf_dir)
-
-
-def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import multimodal
-
-    return multimodal.multimodal_decode(spark, sf_dir)
-
-
 def _q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming ingest, HASH-CHECKED end to end (r2 VERDICT #8:
     this was the last rows-only entry that could be oracle-hardened): the
@@ -489,12 +394,6 @@ def _q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _q_embed_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import ann
-
-    return ann.embed_neardup_keep(spark, sf_dir)
 
 
 def _q_streaming_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,18 +530,6 @@ def _q_streaming_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _q_ann_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import ann
-
-    return ann.ann_ivf_nprobe2(spark, sf_dir)
-
-
-def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gdelta_spark.ops import ann
-
-    return ann.ann_recall(spark, sf_dir)
-
-
 def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming exact-dedup (applyInPandasWithState): documents
     arrive as two file-source waves — wave 1 replays every doc_id % 5 == 0
@@ -740,27 +627,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_runs": _q_event_runs,
         "compression_summary": _q_compression_summary,
         "fixture_regimes": _q_fixture_regimes,
-        "ann_topk": _q_ann_topk,
-        "ann_lsh_best_pairs": _q_ann_lsh,
-        "ann_ivf": _q_ann_ivf,
-        "ann_ivf2": _q_ann_ivf2,
-        "ann_recall": _q_ann_recall,
-        "embed_neardup_keep": _q_embed_neardup_keep,
-        "simhash_text": _q_simhash_text,
-        "quality_ratios": _q_quality_ratios,
+        "ann_topk": ann.ann_topk,
+        "ann_lsh_best_pairs": ann.ann_lsh_best_pairs,
+        "ann_ivf": ann.ann_ivf_topk,
+        "ann_ivf2": ann.ann_ivf_nprobe2,
+        "ann_recall": ann.ann_recall,
+        "embed_neardup_keep": ann.embed_neardup_keep,
+        "simhash_text": dedup.simhash_text,
+        "quality_ratios": textstats.quality_ratios,
         "streaming_window_stats": _q_streaming_window_stats,
         "streaming_window_append": _q_streaming_window_append,
-        "neardup_pairs": _q_neardup_pairs,
-        "neardup_keep": _q_neardup_keep,
-        "neardup_components": _q_neardup_components,
-        "dedup_keep": _q_dedup_keep,
-        "doc_fingerprints": _q_doc_fingerprints,
-        "token_counts": _q_token_counts,
-        "lang_confusion": _q_lang_confusion,
-        "multimodal_stats": _q_multimodal_stats,
-        "multimodal_frames": _q_multimodal_frames,
-        "multimodal_resize": _q_multimodal_resize,
-        "multimodal_decode": _q_multimodal_decode,
+        "neardup_pairs": dedup.neardup_pairs,
+        "neardup_keep": dedup.neardup_keep,
+        "neardup_components": dedup.neardup_components,
+        "dedup_keep": dedup.dedup_keep,
+        "doc_fingerprints": dedup.doc_fingerprints,
+        "token_counts": textstats.token_counts,
+        "lang_confusion": textstats.lang_confusion,
+        "multimodal_stats": multimodal.multimodal_stats,
+        "multimodal_frames": multimodal.multimodal_frames,
+        "multimodal_resize": multimodal.multimodal_resize,
+        "multimodal_decode": multimodal.multimodal_decode,
         "streaming_ingest": _q_streaming_ingest,
         "streaming_dedup": _q_streaming_dedup,
     }
@@ -877,14 +764,14 @@ def oracle_sql() -> dict[str, str]:
             "  FROM events"
             ") GROUP BY user_id ORDER BY user_id"
         ),
-        "ann_topk": _ops_ann().ANN_TOPK_ORACLE,
-        "ann_lsh_best_pairs": _ops_ann().ANN_LSH_ORACLE,
-        "ann_ivf": _ops_ann().ANN_IVF_ORACLE,
-        "ann_ivf2": _ops_ann().ANN_IVF2_ORACLE,
-        "ann_recall": _ops_ann().ANN_RECALL_ORACLE,
-        "embed_neardup_keep": _ops_ann().EMBED_NEARDUP_ORACLE,
-        "simhash_text": _ops_dedup().SIMHASH_TEXT_ORACLE,
-        "quality_ratios": _ops_text().QUALITY_RATIOS_ORACLE,
+        "ann_topk": ann.ANN_TOPK_ORACLE,
+        "ann_lsh_best_pairs": ann.ANN_LSH_ORACLE,
+        "ann_ivf": ann.ANN_IVF_ORACLE,
+        "ann_ivf2": ann.ANN_IVF2_ORACLE,
+        "ann_recall": ann.ANN_RECALL_ORACLE,
+        "embed_neardup_keep": ann.EMBED_NEARDUP_ORACLE,
+        "simhash_text": dedup.SIMHASH_TEXT_ORACLE,
+        "quality_ratios": textstats.QUALITY_RATIOS_ORACLE,
         "streaming_window_stats": (
             "SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS wstart, "
             "event_type, COUNT(*) AS n_events FROM events "
@@ -899,17 +786,17 @@ def oracle_sql() -> dict[str, str]:
             "(SELECT epoch_us(MAX(ts)) FROM events) - 1800000000 "
             "GROUP BY 1, 2 ORDER BY wstart, event_type"
         ),
-        "neardup_pairs": _ops_dedup().NEARDUP_PAIRS_ORACLE,
-        "neardup_keep": _ops_dedup().NEARDUP_KEEP_ORACLE,
-        "neardup_components": _ops_dedup().NEARDUP_COMPONENTS_ORACLE,
-        "dedup_keep": _ops_dedup().DEDUP_KEEP_ORACLE,
-        "doc_fingerprints": _ops_dedup().DOC_FINGERPRINTS_ORACLE,
-        "token_counts": _ops_text().TOKEN_COUNTS_ORACLE,
-        "lang_confusion": _ops_text().LANG_CONFUSION_ORACLE,
-        "multimodal_stats": _ops_multimodal().MULTIMODAL_STATS_ORACLE,
-        "multimodal_frames": _ops_multimodal().MULTIMODAL_FRAMES_ORACLE,
-        "multimodal_resize": _ops_multimodal().MULTIMODAL_RESIZE_ORACLE,
-        "multimodal_decode": _ops_multimodal().MULTIMODAL_DECODE_ORACLE,
+        "neardup_pairs": dedup.NEARDUP_PAIRS_ORACLE,
+        "neardup_keep": dedup.NEARDUP_KEEP_ORACLE,
+        "neardup_components": dedup.NEARDUP_COMPONENTS_ORACLE,
+        "dedup_keep": dedup.DEDUP_KEEP_ORACLE,
+        "doc_fingerprints": dedup.DOC_FINGERPRINTS_ORACLE,
+        "token_counts": textstats.TOKEN_COUNTS_ORACLE,
+        "lang_confusion": textstats.LANG_CONFUSION_ORACLE,
+        "multimodal_stats": multimodal.MULTIMODAL_STATS_ORACLE,
+        "multimodal_frames": multimodal.MULTIMODAL_FRAMES_ORACLE,
+        "multimodal_resize": multimodal.MULTIMODAL_RESIZE_ORACLE,
+        "multimodal_decode": multimodal.MULTIMODAL_DECODE_ORACLE,
         "streaming_dedup": (
             "WITH waved AS ("
             "  SELECT doc_id, text, 0 AS wave FROM documents"
@@ -948,26 +835,3 @@ def oracle_sql() -> dict[str, str]:
         # records rows-only checks for them.
     }
 
-
-def _ops_ann():
-    from gdelta_spark.ops import ann
-
-    return ann
-
-
-def _ops_dedup():
-    from gdelta_spark.ops import dedup
-
-    return dedup
-
-
-def _ops_text():
-    from gdelta_spark.ops import textstats
-
-    return textstats
-
-
-def _ops_multimodal():
-    from gdelta_spark.ops import multimodal
-
-    return multimodal

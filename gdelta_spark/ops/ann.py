@@ -26,8 +26,12 @@ Operators:
 
 - ``ann_ivf`` / ``ann_ivf2``: IVF search over a TRAINED coarse codebook —
   deterministic seeded Lloyd k-means (integer-exact, oracle-replayable),
-  nprobe=1 and nprobe=2. ``ann_recall`` measures recall@k of both against
-  the exact baseline.
+  nprobe=1 and nprobe=2. ``ann_recall`` measures recall@k of nprobe
+  levels {1, 2, 4, nprobe_for(k)} against the exact baseline. Every IVF
+  search — these three and jobs/ann_index_job.py's search over the
+  persisted index — runs one probe ranking (``query_probe_cells``) and one
+  search step (``ivf_search``); the search step and the exact baseline
+  share one top-k-by-dot rank step (``_top_k_by_dot``).
 
 - ``embed_neardup_keep``: embedding-cosine near-dup dedup over the banded
   buckets with an integer-exact cosine >= 0.9 verify.
@@ -128,6 +132,23 @@ def _sqdist(a, b):
     )
 
 
+def _query_vectors(spark: SparkSession, sf_dir: str, n_queries: int) -> DataFrame:
+    """(query_id, qq) — the first ``n_queries`` corpus vectors as queries."""
+    return quantized_embeddings(spark, sf_dir).filter(
+        F.col("vec_id") < n_queries
+    ).select(F.col("vec_id").alias("query_id"), F.col("q").alias("qq"))
+
+
+def _top_k_by_dot(dotted: DataFrame, k: int, *keys: str) -> DataFrame:
+    """The top ``k`` rows of ``dotted`` per ``keys`` by (dot desc,
+    neighbor_id asc), numbered 1..k in ``rnk`` — the one rank step of the
+    exact and the IVF searches."""
+    w = Window.partitionBy(*keys).orderBy(F.desc("dot"), F.asc("neighbor_id"))
+    return dotted.withColumn("rnk", F.row_number().over(w).cast("int")).filter(
+        F.col("rnk") <= k
+    )
+
+
 def _exact_topk(
     spark: SparkSession, sf_dir: str, n_queries: int, k: int
 ) -> DataFrame:
@@ -137,12 +158,9 @@ def _exact_topk(
     a second corpus pass."""
 
     def build() -> DataFrame:
-        v = quantized_embeddings(spark, sf_dir)
-        qs = v.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-        )
         dotted = (
-            v.crossJoin(F.broadcast(qs))
+            quantized_embeddings(spark, sf_dir)
+            .crossJoin(F.broadcast(_query_vectors(spark, sf_dir, n_queries)))
             .filter(F.col("vec_id") != F.col("query_id"))
             .select(
                 "query_id",
@@ -150,12 +168,7 @@ def _exact_topk(
                 _dot(F.col("qq"), F.col("q")).alias("dot"),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-        return (
-            dotted.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= k)
-            .localCheckpoint(eager=False)
-        )
+        return _top_k_by_dot(dotted, k, "query_id").localCheckpoint(eager=False)
 
     return session_table(spark, sf_dir, ("exact_topk", n_queries, k), build)
 
@@ -578,18 +591,22 @@ def ivf_assign(spark: SparkSession, sf_dir: str, iters: int = KM_ITERS) -> DataF
 
 
 def query_probe_cells(
-    qv: DataFrame, coarse: DataFrame, sub: DataFrame, k2: int, nprobe: int
+    qv: DataFrame, coarse: DataFrame, sub: DataFrame, k2: int, levels: "list[int]"
 ) -> DataFrame:
-    """(query_id, cell, qq) — the top-``nprobe`` final cells a query
-    probes: rank coarse cells by (squared L2, c1) and keep the top
-    ``nprobe``; rank THEIR sub-cells by (squared L2 to the sub-centroid,
-    final cell id) and keep the top ``nprobe``. Per-query work is
-    k1 + nprobe * k2 ~ sqrt(k) distances — the query path that survives
-    k ~ 1.6e10. At nprobe=1 this reproduces the greedy assignment exactly
-    (same tie-breaks), so a query probes its own cell first.
+    """(query_id, nprobe, cell, qq) — for each probe level ``nprobe`` in
+    ``levels``, the top-``nprobe`` final cells a query probes: rank coarse
+    cells by (squared L2, c1) and keep the top ``nprobe``; rank THEIR
+    sub-cells by (squared L2 to the sub-centroid, final cell id) and keep
+    the top ``nprobe``. Per-query work is k1 + nprobe * k2 ~ sqrt(k)
+    distances — the query path that survives k ~ 1.6e10. At nprobe=1 this
+    reproduces the greedy assignment exactly (same tie-breaks), so a query
+    probes its own cell first.
 
-    Both windows partition by query_id over the TINY query side only — the
-    corpus is never windowed (r4 VERDICT "wrong" #2: the previous flat
+    All levels are ONE plan: the coarse ranking runs once up to
+    max(levels), a tiny explode of the levels on the QUERY side replays its
+    tie-breaks per level, and the sub-cell window partitions by
+    (query_id, nprobe). Both windows run over the query side only — the
+    corpus is never windowed (r4 VERDICT "wrong" #2: an earlier flat
     version ranked all corpus x k rows through one window)."""
     qc = qv.crossJoin(F.broadcast(coarse)).select(
         "query_id", "qq", F.col("cell").alias("c1"),
@@ -598,20 +615,42 @@ def query_probe_cells(
     w1 = Window.partitionBy("query_id").orderBy(F.asc("d1"), F.asc("c1"))
     topc = (
         qc.withColumn("crnk", F.row_number().over(w1))
-        .filter(F.col("crnk") <= nprobe)
-        .select("query_id", "qq", "c1")
+        .filter(F.col("crnk") <= max(levels))
+        .withColumn("nprobe", F.explode(F.array(*[F.lit(int(l)) for l in levels])))
+        .filter(F.col("crnk") <= F.col("nprobe"))
+        .select("query_id", "nprobe", "qq", "c1")
     )
     qs = topc.join(sub, "c1").select(
-        "query_id", "qq",
+        "query_id", "nprobe", "qq",
         (F.col("c1") * k2 + F.col("sub")).cast("int").alias("cell"),
         _sqdist(F.col("qq"), F.col("cq")).alias("d2"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
+    w2 = Window.partitionBy("query_id", "nprobe").orderBy(F.asc("d2"), F.asc("cell"))
     return (
         qs.withColumn("crnk", F.row_number().over(w2))
-        .filter(F.col("crnk") <= nprobe)
-        .select("query_id", "cell", "qq")
+        .filter(F.col("crnk") <= F.col("nprobe"))
+        .select("query_id", "nprobe", "cell", "qq")
     )
+
+
+def ivf_search(cells: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """(query_id, nprobe, cell, neighbor_id, dot, rnk) — the IVF search
+    step every caller shares: the corpus assignment ``cells`` (vec_id, cell,
+    q) joins the probe rows (query_id, nprobe, cell, qq) on the cell id with
+    the TINY probe side broadcast, so the corpus is never shuffled; the
+    query itself is dropped and the top k per (query_id, nprobe) kept by
+    ``_top_k_by_dot``. Cells are disjoint per corpus vector, so a neighbor
+    appears once per probe level and needs no distinct."""
+    dotted = (
+        cells.join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id", "nprobe", "cell",
+            F.col("vec_id").alias("neighbor_id"),
+            _dot(F.col("qq"), F.col("q")).alias("dot"),
+        )
+    )
+    return _top_k_by_dot(dotted, k, "query_id", "nprobe")
 
 
 def ann_ivf_topk(
@@ -626,28 +665,18 @@ def ann_ivf_topk(
     an adjacent cell) — ``ann_topk`` is the exactness baseline and
     ``ann_recall`` measures the gap; the oracle reproduces the same
     nprobe=1 semantics, so this checks the *algorithm*, not closed-world
-    recall."""
+    recall.
+
+    The probe rows are the queries' own rows of the assignment: at nprobe=1
+    ``query_probe_cells`` returns exactly that cell (same tie-breaks), and
+    reading it from the assignment skips the probe ranking's extra jobs."""
     cells = ivf_assign(spark, sf_dir)
-    qs = cells.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), "cell", F.col("q").alias("qq")
+    probes = cells.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.lit(1).alias("nprobe"), "cell",
+        F.col("q").alias("qq"),
     )
-    dotted = (
-        cells.join(F.broadcast(qs), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cell",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qq"), F.col("q")).alias("dot"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
     return sorted_small(
-        dotted.withColumn("rnk", F.row_number().over(w).cast("int")).filter(
-            F.col("rnk") <= k
-        ),
-        "query_id",
-        "rnk",
+        ivf_search(cells, probes, k).drop("nprobe"), "query_id", "rnk"
     )
 
 
@@ -661,28 +690,11 @@ def ann_ivf_nprobe2(
     query side fans out x2 before the broadcast hash join on the cell id,
     so candidate work per query is ~2 cell widths and the corpus is never
     shuffled or windowed."""
-    v = quantized_embeddings(spark, sf_dir)
     coarse, sub, k2 = kmeans_codebooks(spark, sf_dir)
-    cells = ivf_assign(spark, sf_dir)
-    qv = v.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    qcells = query_probe_cells(qv, coarse, sub, k2, nprobe=2)
-    dotted = (
-        cells.join(F.broadcast(qcells), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qq"), F.col("q")).alias("dot"),
-        )
-        # a neighbor can appear via both probed cells only if duplicated —
-        # cells are disjoint per corpus vector, so no distinct needed
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
+    probes = query_probe_cells(_query_vectors(spark, sf_dir, n_queries), coarse, sub, k2, [2])
     return sorted_small(
-        dotted.withColumn("rnk", F.row_number().over(w).cast("int")).filter(
-            F.col("rnk") <= k
+        ivf_search(ivf_assign(spark, sf_dir), probes, k).select(
+            "query_id", "neighbor_id", "dot", "rnk"
         ),
         "query_id",
         "rnk",
@@ -701,78 +713,28 @@ def ann_recall(
 
     The two-level codebook trains ONCE (session cache in
     ``kmeans_codebooks``), the corpus is assigned ONCE and the exact
-    baseline is ``ann_topk``'s session table; each nprobe level adds only a tiny query-side probe
-    ranking + one broadcast join — never a corpus-wide window (r4 VERDICT
-    "wrong" #2)."""
+    baseline is ``ann_topk``'s session table. All levels run in ONE plan:
+    ``query_probe_cells`` ranks every level on the tiny query side and
+    ``ivf_search`` joins the corpus once by cell — never a corpus-wide
+    window (r4 VERDICT "wrong" #2)."""
     exact = _exact_topk(spark, sf_dir, n_queries, k).select("query_id", "neighbor_id")
-    v = quantized_embeddings(spark, sf_dir)
     coarse, sub, k2 = kmeans_codebooks(spark, sf_dir, iters=iters)
-    cells = ivf_assign(spark, sf_dir, iters=iters)
-    qv = v.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
     levels = sorted({1, 2, 4, nprobe_for(cells_for(n_vectors(spark, sf_dir)))})
-    # ALL nprobe levels in ONE plan: the previous per-level loop built four
-    # independent probe/join/window subtrees and unioned them (~30 AQE
-    # stage-jobs). The probe ranking is computed once up to max(levels) and
-    # a tiny per-level explode on the QUERY side replays query_probe_cells'
-    # exact tie-breaks — (d1, c1) at the coarse level, (d2, cell) at the
-    # sub level — per level; the corpus still joins once by cell.
-    lv_arr = F.array(*[F.lit(int(l)) for l in levels])
-    qc = qv.crossJoin(F.broadcast(coarse)).select(
-        "query_id", "qq", F.col("cell").alias("c1"),
-        _sqdist(F.col("qq"), F.col("cq")).alias("d1"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.asc("d1"), F.asc("c1"))
-    topc = (
-        qc.withColumn("crnk", F.row_number().over(w1))
-        .filter(F.col("crnk") <= max(levels))
-        .withColumn("lv", F.explode(lv_arr))
-        .filter(F.col("crnk") <= F.col("lv"))
-        .select("query_id", "lv", "qq", "c1")
-    )
-    qs = topc.join(sub, "c1").select(
-        "query_id", "lv", "qq",
-        (F.col("c1") * k2 + F.col("sub")).cast("int").alias("cell"),
-        _sqdist(F.col("qq"), F.col("cq")).alias("d2"),
-    )
-    w2 = Window.partitionBy("query_id", "lv").orderBy(F.asc("d2"), F.asc("cell"))
-    qcells = (
-        qs.withColumn("crnk", F.row_number().over(w2))
-        .filter(F.col("crnk") <= F.col("lv"))
-        .select("query_id", "lv", "cell", "qq")
-    )
-    dotted = (
-        cells.join(F.broadcast(qcells), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", "lv",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("qq"), F.col("q")).alias("dot"),
-        )
-    )
-    w3 = Window.partitionBy("query_id", "lv").orderBy(
-        F.desc("dot"), F.asc("neighbor_id")
-    )
-    approx = (
-        dotted.withColumn("rnk", F.row_number().over(w3))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "lv", "neighbor_id")
-    )
+    probes = query_probe_cells(_query_vectors(spark, sf_dir, n_queries), coarse, sub, k2, levels)
     hits = (
-        approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("lv")
+        ivf_search(ivf_assign(spark, sf_dir, iters=iters), probes, k)
+        .join(exact, ["query_id", "neighbor_id"], "left_semi")
+        .groupBy("nprobe")
         .agg(F.count("*").alias("n_hits"))
     )
-    # a level with zero hits must still emit its row (the per-level agg
-    # used to guarantee that); join the literal level list back in. The
-    # level list is an inline VALUES table planned in the JVM: a
-    # createDataFrame over Python rows would ship them through a Python
-    # worker stage.
+    # a level with zero hits must still emit its row; join the literal
+    # level list back in. The level list is an inline VALUES table planned
+    # in the JVM: a createDataFrame over Python rows would ship them
+    # through a Python worker stage.
     values = ", ".join(f"({int(l)})" for l in levels)
     level_rows = spark.sql(f"SELECT * FROM VALUES {values} AS t(nprobe)")
     return sorted_small(
-        level_rows.join(hits, level_rows.nprobe == hits.lv, "left")
+        level_rows.join(hits, "nprobe", "left")
         .select(
             "nprobe", F.coalesce("n_hits", F.lit(0).cast("long")).alias("n_hits")
         )

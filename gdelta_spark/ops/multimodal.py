@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gdelta_spark.pipeline.session import input_table
 
-PAYLOAD_SCHEMA = "item_id long, modality string, payload binary, n_bytes long"
 FEATURE_SCHEMA = "item_id long, n_bytes long, n_space long, n_digit long, n_upper long"
 
 

@@ -1,16 +1,10 @@
 """Spark pipeline: generator, partitioning, encode/decode jobs, warehouse."""
 
-import os
-
 # Every Spark Python worker imports this package while unpickling kernels —
 # before any Arrow deserialization runs. pyarrow's default thread pool is
 # one-per-core PER PROCESS; with N workers that is N*cores threads fighting
 # for N cores (measured: local[32] ran 4-5x SLOWER than local[8] until this).
-if os.environ.get("GDELTA_SPARK_PA_THREADS", "1") == "1":
-    try:
-        import pyarrow as _pa
+import pyarrow as _pa
 
-        _pa.set_cpu_count(1)
-        _pa.set_io_thread_count(2)
-    except Exception:  # pragma: no cover
-        pass
+_pa.set_cpu_count(1)
+_pa.set_io_thread_count(2)

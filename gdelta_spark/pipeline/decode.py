@@ -104,10 +104,11 @@ def verify_partition_local(salted_bin_df: DataFrame, blocks_df: DataFrame) -> Da
         decoded = _decode_group(blks)
         ok = 0
         if decoded.num_rows == src_rows.num_rows:
-            # positional compare after a stable sort of both sides by doc_id:
-            # duplicate doc_ids verify each occurrence against its own
-            # decoded payload instead of collapsing to the last one
-            s, d = src_rows.sort_by("doc_id"), decoded.sort_by("doc_id")
+            # multiset compare: both sides sorted by (doc_id, tok_bytes), so
+            # the copies of a duplicate doc_id pair up by payload whatever
+            # order the decoder returns them in (cluster order, not arrival)
+            key = [("doc_id", "ascending"), ("tok_bytes", "ascending")]
+            s, d = src_rows.sort_by(key), decoded.sort_by(key)
             same = pc.and_(
                 pc.equal(s.column("doc_id"), d.column("doc_id")),
                 pc.equal(s.column("tok_bytes"), d.column("tok_bytes")),

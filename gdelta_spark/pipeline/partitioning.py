@@ -34,9 +34,6 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df.repartition(n) if cur < n else df
 
 
-PART_COLS = ("source", "bucket", "salt")
-
-
 def with_buckets(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "bucket", F.floor(F.log2(F.col("n_tok").cast("double") + F.lit(1.0))).cast("int")

@@ -97,9 +97,19 @@ def capped_token_batches(
         s = j
 
 
+class TokensTypeError(TypeError):
+    """A ``tokens`` column that is not list<int32>."""
+
+
 def binary_batches(rb: pa.RecordBatch, keep: tuple[str, ...]) -> Iterator[pa.RecordBatch]:
     """``keep`` columns of ``rb`` plus ``tok_bytes`` in place of ``tokens``,
-    in capped slices (see capped_token_batches)."""
+    in capped slices (see capped_token_batches). The one list -> binary
+    projection (the parquet scan's and ``serialize_tokens``'), so it owns
+    the type check: the reinterpretation reads 4-byte values, and any other
+    element width would be misread without an error."""
+    t = rb.schema.field("tokens").type
+    if not (pa.types.is_list(t) and t.value_type == pa.int32()):
+        raise TokensTypeError(f"tokens column must be list<int32>, got {t}")
     for sub in capped_token_batches(rb):
         cols = {c: sub.column(c) for c in keep}
         cols[TOK_BYTES_COL] = _list_chunk_to_binary(sub.column("tokens"))

@@ -9,8 +9,10 @@
 
 ``--search`` reads the persisted index and answers top-k for a set of query
 vectors at a chosen nprobe WITHOUT touching the raw embeddings or
-re-training: probe cells come from the broadcast codebook, candidates from
-a broadcast hash join on the cell id against the cells table — the corpus
+re-training. It runs the two steps every IVF query in ops/ann.py runs:
+``query_probe_cells`` ranks the probe cells against the broadcast
+codebook, and ``ivf_search`` joins them to the cells table (probe side
+broadcast, on the cell id) and keeps the top k by dot product — the corpus
 is never shuffled, which is the plan that holds at 10^12 vectors
 (SCALE.md: "the codebook comes from a sampled k-means job and cells
 persist as a table"). Deployable via spark-submit --py-files like every
@@ -30,7 +32,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import pyspark.sql.functions as F  # noqa: E402
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 
 def build_index(spark: SparkSession, sf_dir: str, index_dir: str) -> dict:
@@ -66,8 +68,10 @@ def search_index(
     """Top-k by quantized dot product over the persisted index. Query
     vectors are looked up in the cells table (they are corpus members);
     their ``nprobe`` probe cells come from the persisted two-level
-    codebook via the SAME ranking rule the direct queries use
-    (ann.query_probe_cells), so search-over-index == direct search."""
+    codebook through ``ann.query_probe_cells`` and the candidates are
+    ranked by ``ann.ivf_search`` — the probe ranking and search step the
+    direct IVF queries run, so search-over-index == direct search
+    (tests/test_ops.py checks nprobe 1 and 2)."""
     from gdelta_spark.ops import ann
 
     cells = spark.read.parquet(f"{index_dir}/cells.parquet")
@@ -78,20 +82,10 @@ def search_index(
     qv = cells.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
     )
-    qcells = ann.query_probe_cells(qv, coarse, sub, k2, nprobe)
-    dotted = (
-        cells.join(F.broadcast(qcells), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            ann._dot(F.col("qq"), F.col("q")).alias("dot"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
+    probes = ann.query_probe_cells(qv, coarse, sub, k2, [nprobe])
     return (
-        dotted.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
+        ann.ivf_search(cells, probes, k)
+        .select("query_id", "neighbor_id", "dot", "rnk")
         .orderBy("query_id", "rnk")
     )
 

@@ -30,9 +30,10 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("gdelta-encode", master=args.master)
-    tokens = spark.read.parquet(args.input)
+    # the path, not a DataFrame: encode_and_commit then reads the tokens
+    # with the Python-native parquet scan (pyscan), not the JVM array path
     summary = encode_and_commit(
-        spark, tokens, args.warehouse, group_bytes=args.group_mb << 20
+        spark, args.input, args.warehouse, group_bytes=args.group_mb << 20
     )
     print(json.dumps(summary))
     spark.stop()

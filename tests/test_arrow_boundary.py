@@ -128,6 +128,48 @@ def test_verify_flags_rows_the_source_lacks(spark, tmp_path):
     assert report.filter(~F.col("ok")).count() == n_gone
 
 
+def _duplicate_id_part():
+    """One 13-row part whose doc_id ``d3`` occurs twice: a random row, then
+    six near-copies d0..d5 of one base row (d3 among them, so the decoder
+    returns the two d3 copies in cluster order, not arrival order), then six
+    random rows."""
+    rng = np.random.default_rng(1)
+
+    def rand():
+        return rng.integers(0, 50000, 4000, dtype=np.int32)
+
+    rows = [("d3", rand())]
+    base = rand()
+    for i in range(6):
+        r = base.copy()
+        r[10 * i : 10 * i + 5] = i
+        rows.append((f"d{i}", r))
+    rows += [(f"r{i}", rand()) for i in range(6)]
+    return _rows_table([(d, r.astype("<i4").tobytes()) for d, r in rows])
+
+
+def test_verify_local_compares_duplicate_doc_ids_as_multisets(spark):
+    """The partition-local verify pairs the copies of a duplicate doc_id by
+    payload, so a correct round trip verifies every row whatever order the
+    decoder returns them in; a one-byte change in either copy of the
+    duplicate is still a mismatch."""
+    part = _duplicate_id_part()
+    blocks = spark.createDataFrame(encode._encode_group(part))
+
+    def report(src: pa.Table):
+        r = decode.verify_partition_local(spark.createDataFrame(src), blocks).first()
+        return r["n_rows"], r["n_ok"]
+
+    assert report(part) == (13, 13)
+    payloads = part.column("tok_bytes").to_pylist()
+    for i in [i for i, d in enumerate(part.column("doc_id").to_pylist()) if d == "d3"]:
+        bad = list(payloads)
+        bad[i] = bytes([bad[i][0] ^ 1]) + bad[i][1:]
+        src = part.set_column(2, "tok_bytes", pa.array(bad, pa.binary()))
+        n_rows, n_ok = report(src)
+        assert n_rows == 13 and n_ok < 13
+
+
 def test_pyscan_unreadable_file_raises(spark, tmp_path):
     """A truncated parquet file beside a good one fails the scan by name
     instead of silently dropping its rows."""

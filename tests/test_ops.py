@@ -197,8 +197,9 @@ def test_query_job_cli(tmp_path):
 
 def test_ann_index_build_and_search(spark, tmp_path):
     """Persisted IVF index: build writes codebook + cells parquet; search
-    over the index at nprobe=1 reproduces the direct ann_ivf_topk answer
-    exactly (same codebook, same tie-breaks) without retraining."""
+    over the index reproduces the direct answers exactly (same codebook,
+    same tie-breaks) without retraining: ann_ivf_topk at nprobe=1 and
+    ann_ivf_nprobe2 at nprobe=2."""
     from jobs.ann_index_job import build_index, search_index
     from gdelta_spark.ops import ann
 
@@ -213,6 +214,11 @@ def test_ann_index_build_and_search(spark, tmp_path):
         "query_id", "neighbor_id", "dot", "rnk"
     ).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+    got2 = search_index(spark, idx, list(range(10)), nprobe=2, k=5).collect()
+    want2 = ann.ann_ivf_nprobe2(spark, sf).collect()
+    assert len(want2) == 50
+    assert [tuple(r) for r in got2] == [tuple(r) for r in want2]
 
 
 def test_min_label_components_long_chain(spark):

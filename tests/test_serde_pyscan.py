@@ -110,3 +110,25 @@ def test_capped_batches_split_and_rebase():
         for b in serde._list_chunk_to_binary(s.column("tokens")).to_pylist()
     ]
     assert got == [r.tobytes() for r in rows2]
+
+
+def test_encode_rejects_int64_tokens(spark, tmp_path):
+    """A parquet tokens table with int64 elements fails with the named
+    error instead of being reinterpreted as int32 pairs."""
+    import pyarrow.parquet as pq
+
+    from gdelta_spark.pipeline import warehouse
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    pq.write_table(
+        pa.table({
+            "doc_id": ["a", "b"],
+            "tokens": pa.array([[1, 2, 3], [4]], pa.list_(pa.int64())),
+            "n_tok": pa.array([3, 1], pa.int32()),
+            "source": ["s", "s"],
+        }),
+        corpus / "part-0.parquet",
+    )
+    with pytest.raises(Exception, match="TokensTypeError"):
+        warehouse.encode_and_commit(spark, str(corpus), str(tmp_path / "wh"))
