@@ -81,33 +81,29 @@ def documents_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _salted_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived tokens table, serialized and salted for encode and verify."""
+    from gdelta_spark.pipeline import partitioning, serde
+
+    # materialized once for the salt plan, the encoder and the verify, not
+    # re-run by each; recomputed from the parquet input on every call
+    bin_df = serde.serialize_tokens(
+        documents_tokens(spark, sf_dir), keep=("doc_id", "n_tok", "source")
+    ).localCheckpoint(eager=False)
+    return partitioning.with_salt(bin_df, SALT_BUDGET_BYTES)
+
+
 def _roundtrip_report(spark: SparkSession, sf_dir: str, codec: str | None) -> DataFrame:
     """Encode the derived tokens table (optionally forcing one codec), decode,
-    and report per-doc equality — the reference's round-trip test
-    (/root/reference/test.sh:8-24) as a SQL-comparable query."""
+    and report per-doc equality — the reference codec's round-trip test as a
+    SQL-comparable query. Encoder and verify read one salted frame."""
     from gdelta_spark.codecs import core
     from gdelta_spark.pipeline import decode as decode_mod
     from gdelta_spark.pipeline import encode as encode_mod
 
-    from gdelta_spark.pipeline import serde
-
-    tokens_df = documents_tokens(spark, sf_dir)
-    # serialize ONCE and materialize: the encode data pass, the salt-plan
-    # stats pass and the verify source previously each re-ran the full
-    # scan + tokenize + Arrow projection (3 identical MapInArrow subtrees
-    # in the plan — guide §8: materialize an intermediate instead of
-    # recomputing it). localCheckpoint is within this query's own timed
-    # region and is recomputed from the parquet input on every invocation.
-    bin_df = serde.serialize_tokens(
-        tokens_df, keep=("doc_id", "n_tok", "source")
-    ).localCheckpoint(eager=False)
+    salted = _salted_documents(spark, sf_dir)
     force = None if codec is None else core.CODEC_IDS[codec]
-    blocks_df = encode_mod.encode_blocks_bin(
-        bin_df, group_bytes=SALT_BUDGET_BYTES, force_codec=force
-    )
-    report = decode_mod.verify_roundtrip_bin(
-        bin_df.select("doc_id", "tok_bytes"), blocks_df
-    )
+    report = decode_mod.verify_rows(salted, encode_mod.encode_salted(salted, force))
     return report.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("ok").cast("int").alias("ok"),
@@ -276,15 +272,8 @@ def _q_lang_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_compression_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only metrics query (not SQL-expressible: runs the real encoder)."""
     from gdelta_spark.pipeline import encode as encode_mod
-    from gdelta_spark.pipeline import serde
 
-    tokens_df = documents_tokens(spark, sf_dir)
-    # one tokenize+serialize pass shared by the salt-stats and encode-data
-    # sides (see _roundtrip_report)
-    bin_df = serde.serialize_tokens(
-        tokens_df, keep=("doc_id", "n_tok", "source")
-    ).localCheckpoint(eager=False)
-    blocks_df = encode_mod.encode_blocks_bin(bin_df, group_bytes=SALT_BUDGET_BYTES)
+    blocks_df = encode_mod.encode_salted(_salted_documents(spark, sf_dir))
     return sorted_small(
         blocks_df.filter(F.col("block_id") >= 0)
         .withColumn("source", F.split("part_id", "/").getItem(0))

@@ -111,7 +111,7 @@ def decode_block_rows(blob: bytes, base: bytes | None = None) -> list[np.ndarray
     blob = _unwrap(blob)
     magic, version, n_rows = struct.unpack_from("<BBI", blob, 0)
     if magic != BLOCK_MAGIC or version != BLOCK_VERSION:
-        raise ValueError("not a gdelta_spark row block")
+        raise core.CorruptBlockError("not a gdelta_spark row block")
     lens, pos = _unpack_for(blob, 6)
     payload = blob[pos:]
     if len(payload) >= 3 and payload[2] == core.GDELTA:

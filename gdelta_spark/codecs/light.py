@@ -66,9 +66,13 @@ def bitpack(vals: np.ndarray, width: int) -> bytes:
 
 
 def bitunpack(buf: bytes, n: int, width: int) -> np.ndarray:
-    """Inverse of bitpack -> uint64 array of length n."""
+    """Inverse of bitpack -> uint64 array of length n. ``buf`` may stop
+    short of the 64-lane word grid (bitpack trims to the packed size), but
+    not short of the packed size: that is a truncated body."""
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint64)
+    if len(buf) < (n * width + 7) // 8:
+        raise core.CorruptBlockError(f"{len(buf)} bytes for {n} values of {width} bits")
     m = (n + 63) // 64
     need = m * width * 8
     if len(buf) < need:

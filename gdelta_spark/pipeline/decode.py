@@ -2,12 +2,14 @@
 
 Decode is one ``applyInArrow`` per part_id group (``pa.Table`` in and out):
 the 'base' bootstrap blocks (block_id < 0, one per gdelta-coded cluster) are
-decoded first, then every data block against its named base. Verify
-joins decoded rows to the original table and asserts token-array equality —
-the reference's own round-trip test lifted to table scale
-(/root/reference/test.sh:8-24)."""
+decoded first, then every data block against its named base. Rows come back
+in block (cluster) order, not arrival order. Verify cogroups source rows and
+blocks on part_id (no doc_id shuffle) and matches each doc_id's copies as
+multisets of payloads, so that order does not matter."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -17,6 +19,7 @@ from pyspark.sql import DataFrame
 from gdelta_spark import blocks
 from gdelta_spark.codecs.core import CorruptBlockError
 from gdelta_spark.codecs.delta import tokens_to_bytes
+from gdelta_spark.pipeline import partitioning, serde
 
 DECODED_SCHEMA = "doc_id string, tok_bytes binary"
 
@@ -59,81 +62,82 @@ def _decode_group(blks: pa.Table) -> pa.Table:
 def decode_tokens_bytes(blocks_df: DataFrame) -> DataFrame:
     """blocks -> (doc_id, tok_bytes binary): binary stays binary through the
     Arrow boundary (the array<int> path is ~50x slower, see serde.py)."""
-    # explicit kernel-stage partition count, exempt from AQE coalescing —
-    # same rationale as the encode side (pipeline/encode.py): Python
-    # kernels want many small partitions, not JVM-sized ones
-    n_kernel = int(
-        blocks_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    return (
-        blocks_df.repartition(n_kernel, "part_id")
-        .groupBy("part_id")
-        .applyInArrow(_decode_group, schema=DECODED_SCHEMA)
+    return partitioning.by_part(blocks_df).groupBy("part_id").applyInArrow(
+        _decode_group, schema=DECODED_SCHEMA
     )
 
 
 def decode_tokens(blocks_df: DataFrame) -> DataFrame:
     """blocks -> (doc_id, tokens array<int>) for downstream consumers."""
-    from gdelta_spark.pipeline import serde
-
     return serde.deserialize_tokens(decode_tokens_bytes(blocks_df), keep=("doc_id",))
 
 
-def verify_roundtrip_bin(src_bin_df: DataFrame, blocks_df: DataFrame) -> DataFrame:
-    """Per-row equality report from a pre-serialized source (doc_id,
-    tok_bytes). Binary equality == token-array equality (int32 LE is
-    deterministic); the join and compare stay JVM-side."""
-    src = src_bin_df.select(
-        "doc_id", F.col("tok_bytes").alias("src_bytes")
+def _compare(src_rows: pa.Table, blks: pa.Table) -> pa.Table:
+    """The one round-trip compare: source rows (doc_id, tok_bytes) and the
+    blocks of one part_id -> (doc_id, ok) rows. Each doc_id reports
+    max(source copies, decoded copies) rows, as many of them ok as the two
+    sides have payloads in common: a row either side lacks is a mismatch,
+    and a one-byte change in one copy of a duplicate doc_id is exactly one."""
+    src, dec = (
+        Counter(zip(t.column("doc_id").to_pylist(), t.column("tok_bytes").to_pylist()))
+        for t in (src_rows, _decode_group(blks))
     )
-    decoded = decode_tokens_bytes(blocks_df).withColumnRenamed("tok_bytes", "dec_bytes")
-    return src.join(decoded, "doc_id", "full").select(
-        "doc_id",
-        F.expr("src_bytes <=> dec_bytes").alias("ok"),
+    n_ok = Counter(doc for doc, _ in (src & dec).elements())
+    n = Counter(doc for doc, _ in src.elements()) | Counter(doc for doc, _ in dec.elements())
+    ids, ok = [], []
+    for doc, k in n.items():
+        ids += [doc] * k
+        ok += [i < n_ok[doc] for i in range(k)]
+    return pa.table({"doc_id": pa.array(ids, pa.string()), "ok": pa.array(ok, pa.bool_())})
+
+
+def _verify_stage(salted_bin_df: DataFrame, blocks_df: DataFrame, shape, schema: str) -> DataFrame:
+    """Cogroups on part_id; ``shape(part_id, _compare rows)`` is a part's output."""
+
+    def kernel(src_rows: pa.Table, blks: pa.Table) -> pa.Table:
+        part = (src_rows if src_rows.num_rows else blks).column("part_id")[0].as_py()
+        return shape(part, _compare(src_rows, blks))
+
+    src = partitioning.by_part(salted_bin_df.select("part_id", "doc_id", "tok_bytes"))
+    return (
+        src.groupBy("part_id")
+        .cogroup(partitioning.by_part(blocks_df).groupBy("part_id"))
+        .applyInArrow(kernel, schema=schema)
     )
 
 
 def verify_partition_local(salted_bin_df: DataFrame, blocks_df: DataFrame) -> DataFrame:
-    """Partition-local verification: source rows and blocks are cogrouped on
-    part_id and compared inside the kernel — no global doc_id shuffle, the
-    100 TB-scale variant (SCALE.md). Returns (part_id, n_rows, n_ok)."""
-    src = salted_bin_df.select("part_id", "doc_id", "tok_bytes")
+    """(part_id, n_rows, n_ok) per part of a salted source (partitioning.
+    with_salt) against its blocks, summed inside the kernel: a groupBy after
+    the cogroup would add an exchange."""
+    return _verify_stage(salted_bin_df, blocks_df, lambda part, rows: pa.table({
+        "part_id": pa.array([part], pa.string()),
+        "n_rows": pa.array([rows.num_rows], pa.int64()),
+        "n_ok": pa.array([pc.sum(rows.column("ok")).as_py() or 0], pa.int64()),
+    }), "part_id string, n_rows long, n_ok long")
 
-    def cmp(src_rows: pa.Table, blks: pa.Table) -> pa.Table:
-        part = (src_rows if src_rows.num_rows else blks).column("part_id")[0]
-        decoded = _decode_group(blks)
-        ok = 0
-        if decoded.num_rows == src_rows.num_rows:
-            # multiset compare: both sides sorted by (doc_id, tok_bytes), so
-            # the copies of a duplicate doc_id pair up by payload whatever
-            # order the decoder returns them in (cluster order, not arrival)
-            key = [("doc_id", "ascending"), ("tok_bytes", "ascending")]
-            s, d = src_rows.sort_by(key), decoded.sort_by(key)
-            same = pc.and_(
-                pc.equal(s.column("doc_id"), d.column("doc_id")),
-                pc.equal(s.column("tok_bytes"), d.column("tok_bytes")),
-            )
-            ok = pc.sum(same).as_py() or 0
-        # decoded rows the source lacks count as rows too, so a part with
-        # blocks and no source rows reports mismatches, as the full join does
-        return pa.table({
-            "part_id": pa.array([part.as_py()], pa.string()),
-            "n_rows": pa.array([max(src_rows.num_rows, decoded.num_rows)], pa.int64()),
-            "n_ok": pa.array([ok], pa.int64()),
-        })
 
-    return (
-        src.groupBy("part_id")
-        .cogroup(blocks_df.groupBy("part_id"))
-        .applyInArrow(cmp, schema="part_id string, n_rows long, n_ok long")
-    )
+def verify_rows(salted_bin_df: DataFrame, blocks_df: DataFrame) -> DataFrame:
+    """(part_id, doc_id, ok) per row of a salted source against its blocks."""
+    return _verify_stage(salted_bin_df, blocks_df, lambda part, rows: rows.add_column(
+        0, "part_id", pa.array([part] * rows.num_rows, pa.string())
+    ), "part_id string, doc_id string, ok boolean")
 
 
 def verify_roundtrip(tokens_df: DataFrame, blocks_df: DataFrame) -> DataFrame:
-    """Per-row equality report: (doc_id, ok). All-true == bit-identical
-    corpus — the reference's round-trip test at table scale."""
-    from gdelta_spark.pipeline import serde
-
-    return verify_roundtrip_bin(
-        serde.serialize_tokens(tokens_df, keep=("doc_id",)), blocks_df
+    """(doc_id, ok) per row of a tokens table (doc_id, tokens, n_tok) against
+    its blocks. A source row goes to the part whose data blocks store its
+    doc_id in its n_tok bucket (a streaming warehouse's part_ids cannot be
+    rebuilt from the source); a row with no part is a mismatch. Limits:
+    ``blocks_df`` is read twice, so pass a warehouse read or a cached frame;
+    a doc_id stored in two parts of one bucket (across streaming batches or
+    sources) routes to no part and reports mismatches, never a silent pass."""
+    stored = blocks_df.filter(F.col("block_id") >= 0).select(
+        "part_id", F.explode("doc_ids").alias("doc_id"),
+        partitioning.part_bucket().alias("bucket"),
     )
+    home = stored.groupBy("doc_id", "bucket").agg(
+        F.when(F.min("part_id") == F.max("part_id"), F.min("part_id")).alias("part_id")
+    )
+    src = partitioning.with_buckets(serde.serialize_tokens(tokens_df, keep=("doc_id", "n_tok")))
+    return verify_rows(src.join(home, ["doc_id", "bucket"], "left"), blocks_df).select("doc_id", "ok")

@@ -331,19 +331,14 @@ def encode_blocks_bin(
     salted = partitioning.with_salt(
         bin_df, group_bytes or partitioning.DEFAULT_GROUP_BYTES, stats_df=stats_df
     )
+    return encode_salted(salted, force_codec)
 
-    # explicit partition count for the kernel exchange: the Python encode
-    # kernel runs at ~0.05 GB/s/core, so its stage wants MANY partitions,
-    # while AQE's size-based coalescing (tuned for JVM stages) would merge
-    # this shuffle to a handful of tasks and serialize the kernel. A
-    # user-specified repartition count is exempt from AQE coalescing, and
-    # groupBy on the same key reuses the partitioning (no second exchange).
-    n_kernel = int(
-        salted.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
+
+def encode_salted(salted: DataFrame, force_codec: int | None = None) -> DataFrame:
+    """A salted source (partitioning.with_salt: part_id, doc_id, tok_bytes)
+    -> encoded blocks DataFrame."""
     return (
-        salted.select("part_id", "doc_id", "tok_bytes")
-        .repartition(n_kernel, "part_id")
+        partitioning.by_part(salted.select("part_id", "doc_id", "tok_bytes"))
         .groupBy("part_id")
         .applyInArrow(lambda rows: _encode_group(rows, force_codec), schema=BLOCKS_SCHEMA)
     )

@@ -11,7 +11,7 @@ produce identical partitions (required for resume-by-manifest-hash)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 # target token bytes per encode group (~64 MiB serialized)
 DEFAULT_GROUP_BYTES = 64 << 20
@@ -32,6 +32,15 @@ def spread_input(df: DataFrame) -> DataFrame:
     except Exception:  # noqa: BLE001 — planning-only probe; never fatal
         return df
     return df.repartition(n) if cur < n else df
+
+
+def by_part(df: DataFrame) -> DataFrame:
+    """``df`` hash-partitioned on part_id for a Python kernel stage, which
+    (~0.05 GB/s/core) wants many tasks: an explicit count is exempt from
+    AQE's size-based coalescing. A groupBy on part_id reuses it, and stages
+    over one frame share the exchange."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
+    return df.repartition(n, "part_id")
 
 
 def with_buckets(df: DataFrame) -> DataFrame:
@@ -82,3 +91,8 @@ def with_salt(
             F.concat_ws("/", "source", F.format_string("b%02d", "bucket"), F.format_string("s%04d", "salt")),
         )
     )
+
+
+def part_bucket() -> Column:
+    """The bucket a with_salt part_id names, under any batch= prefix (else null)."""
+    return F.regexp_extract("part_id", r"/b(\d+)/s\d+$", 1).try_cast("int")

@@ -4,10 +4,10 @@ against the source tokens table.
     spark-submit --py-files gdelta_spark.zip jobs/verify_job.py \
         --input /path/tokens_parquet --warehouse /path/wh --group-mb 64
 
-Default mode is ``local``: source rows and encoded blocks are cogrouped on
-part_id (reconstructed from the same salt plan the encoder used), so the
+Source rows and encoded blocks are cogrouped on part_id (reconstructed from
+the same salt plan the encoder used) and compared inside each part, so the
 verify never shuffles the corpus on doc_id — the plan that holds at 100 TB.
-``--mode join`` keeps the per-doc full-join report for small inputs.
+Prints ``{"rows", "mismatches", "ok"}`` and exits 1 on any mismatch.
 """
 
 from __future__ import annotations
@@ -32,33 +32,22 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     ap.add_argument("--group-mb", type=int, default=None,
                     help="salt-plan group size; must match the encode run")
-    ap.add_argument("--mode", choices=("local", "join"), default="local")
     args = ap.parse_args()
 
     spark = get_spark("gdelta-verify", master=args.master)
     from gdelta_spark.pipeline import partitioning
-    from gdelta_spark.pipeline.decode import verify_partition_local, verify_roundtrip_bin
+    from gdelta_spark.pipeline.decode import verify_partition_local
     from gdelta_spark.pipeline.pyscan import scan_tokens_binary
 
-    blocks = Warehouse(args.warehouse).read_blocks(spark)
-    src = scan_tokens_binary(spark, args.input)
-    if args.mode == "local":
-        group_bytes = (args.group_mb << 20) if args.group_mb else None
-        stats_df = spark.read.parquet(args.input).select("n_tok", "source")
-        salted = partitioning.with_salt(
-            src, group_bytes or partitioning.DEFAULT_GROUP_BYTES, stats_df=stats_df
-        )
-        report = verify_partition_local(salted, blocks)
-        agg = report.agg(
-            F.sum("n_rows").alias("rows"), F.sum("n_ok").alias("ok_rows")
-        ).collect()[0]
-        total, ok_rows = int(agg["rows"] or 0), int(agg["ok_rows"] or 0)
-        bad = total - ok_rows
-    else:
-        report = verify_roundtrip_bin(src, blocks)
-        total = report.count()
-        bad = report.filter(~F.col("ok")).count()
-    print(json.dumps({"rows": total, "mismatches": bad, "ok": bad == 0, "mode": args.mode}))
+    salted = partitioning.with_salt(
+        scan_tokens_binary(spark, args.input),
+        (args.group_mb << 20) if args.group_mb else partitioning.DEFAULT_GROUP_BYTES,
+        stats_df=spark.read.parquet(args.input).select("n_tok", "source"),
+    )
+    report = verify_partition_local(salted, Warehouse(args.warehouse).read_blocks(spark))
+    total, n_ok = (int(v or 0) for v in report.agg(F.sum("n_rows"), F.sum("n_ok")).first())
+    bad = total - n_ok
+    print(json.dumps({"rows": total, "mismatches": bad, "ok": bad == 0}))
     spark.stop()
     sys.exit(0 if bad == 0 else 1)
 

@@ -16,7 +16,7 @@ import pytest
 
 from gdelta_spark import fixtures
 from gdelta_spark.codecs.core import CorruptBlockError
-from gdelta_spark.pipeline import decode, encode, generator, partitioning, pyscan, warehouse
+from gdelta_spark.pipeline import decode, encode, generator, partitioning, pyscan, serde, warehouse
 
 PIPELINE = Path(__file__).resolve().parent.parent / "gdelta_spark" / "pipeline"
 
@@ -103,8 +103,8 @@ def test_committed_blocks_file_schema(spark, tmp_path):
 
 def test_verify_flags_rows_the_source_lacks(spark, tmp_path):
     """A warehouse holding a partition the source no longer has: the
-    partition-local verify (``verify_job.py --mode local``) counts the
-    decoded rows as mismatches, as the full join (``--mode join``) does."""
+    per-part summary (``verify_job.py``) and the per-row stage both count
+    the decoded rows as mismatches."""
     corpus, root = str(tmp_path / "corpus"), str(tmp_path / "wh")
     generator.write_tokens_table(spark, corpus, rows_per_regime=5, seed=4, num_partitions=2)
     warehouse.encode_and_commit(spark, corpus, root)
@@ -124,7 +124,7 @@ def test_verify_flags_rows_the_source_lacks(spark, tmp_path):
     ).first()
     assert agg["rows"] - agg["ok"] == n_gone
 
-    report = decode.verify_roundtrip_bin(src.select("doc_id", "tok_bytes"), blocks_df)
+    report = decode.verify_rows(src, blocks_df)
     assert report.filter(~F.col("ok")).count() == n_gone
 
 
@@ -166,8 +166,49 @@ def test_verify_local_compares_duplicate_doc_ids_as_multisets(spark):
         bad = list(payloads)
         bad[i] = bytes([bad[i][0] ^ 1]) + bad[i][1:]
         src = part.set_column(2, "tok_bytes", pa.array(bad, pa.binary()))
-        n_rows, n_ok = report(src)
-        assert n_rows == 13 and n_ok < 13
+        assert report(src) == (13, 12)
+
+
+def test_verify_duplicate_doc_id_round_trip_is_clean(spark):
+    """One doc_id with two payloads, [1, 2, 3] and [4, 5], round-trips
+    clean: 3 rows, all ok, through the per-row stage and through
+    ``verify_roundtrip`` (a doc_id full join reported 5 rows and 2
+    mismatches)."""
+    tokens = spark.createDataFrame(
+        [("a", [1, 2, 3], 3, "s"), ("a", [4, 5], 2, "s"), ("b", [6], 1, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    blocks_df = encode.encode_blocks(tokens).cache()
+    salted = partitioning.with_salt(
+        serde.serialize_tokens(tokens, keep=("doc_id", "n_tok", "source")),
+        partitioning.DEFAULT_GROUP_BYTES,
+    )
+    for report in (decode.verify_rows(salted, blocks_df), decode.verify_roundtrip(tokens, blocks_df)):
+        rows = report.collect()
+        assert sorted(r["doc_id"] for r in rows) == ["a", "a", "b"]
+        assert all(r["ok"] for r in rows)
+    blocks_df.unpersist()
+
+
+def test_verify_roundtrip_routes_source_rows_by_stored_doc_ids(spark):
+    """``verify_roundtrip`` sends each source row to the part storing its
+    doc_id in its n_tok bucket: a row no part stores is a mismatch, and a
+    doc_id stored in two parts of one bucket (two streaming batches)
+    reports mismatches on every copy, never a silent pass."""
+    def tok(v):
+        return np.array([v], "<i4").tobytes()
+
+    p1 = _rows_table([("a", tok(1)), ("b", tok(2))], "s/b01/s0000")
+    p2 = _rows_table([("a", tok(1)), ("c", tok(3))], "batch=000001/s/b01/s0000")
+    blocks_df = spark.createDataFrame(
+        pa.concat_tables([encode._encode_group(p1), encode._encode_group(p2)])
+    )
+    tokens = spark.createDataFrame(
+        [("a", [1], 1), ("b", [2], 1), ("c", [3], 1), ("z", [4], 1)],
+        "doc_id string, tokens array<int>, n_tok int",
+    )
+    rows = sorted((r["doc_id"], r["ok"]) for r in decode.verify_roundtrip(tokens, blocks_df).collect())
+    assert rows == [("a", False)] * 3 + [("b", True), ("c", True), ("z", False)]
 
 
 def test_pyscan_unreadable_file_raises(spark, tmp_path):

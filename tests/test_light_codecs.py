@@ -128,3 +128,28 @@ def test_compression_effective():
         assert len(blob) < arr.nbytes * ratio, (
             f"{regime}: {len(blob)} vs raw {arr.nbytes}"
         )
+
+
+@pytest.mark.parametrize("cid", [core.FOR, core.DICT, core.DBP],
+                         ids=[core.CODEC_NAMES[c] for c in (core.FOR, core.DICT, core.DBP)])
+@pytest.mark.parametrize("cut", [1, 5, 20])
+def test_truncated_bitpacked_body_raises(cid, cut):
+    """A bit-packed body cut short raises CorruptBlockError instead of
+    decoding the missing bits as zeros."""
+    r = np.random.default_rng(cid * 100 + cut)
+    vals = {
+        core.FOR: r.integers(1000, 1256, 500),
+        core.DICT: r.choice(r.integers(0, 50000, 20), 500),
+        core.DBP: np.cumsum(r.integers(0, 40, 500)),
+    }[cid].astype(np.int32)
+    blob = codecs.encode_block(vals, cid)
+    assert np.array_equal(codecs.decode_block(blob), vals)
+    with pytest.raises(core.CorruptBlockError):
+        codecs.decode_block(blob[:-cut])
+
+
+def test_foreign_row_block_raises_corrupt_block():
+    from gdelta_spark import blocks
+
+    with pytest.raises(core.CorruptBlockError):
+        blocks.decode_block_rows(b"\x00\x01" + bytes(20))

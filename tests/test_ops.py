@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pyspark.sql.functions as F
 
 from gdelta_spark import fixtures
 from gdelta_spark.pipeline import decode as decode_mod
 from gdelta_spark.pipeline import generator, partitioning, serde, warehouse
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_fsck_and_partition_local_verify(spark, tmp_path):
@@ -56,13 +59,13 @@ def test_decode_job_cli(spark, tmp_path):
     r = subprocess.run(
         [sys.executable, "jobs/encode_job.py", "--input", inp, "--warehouse", root,
          "--group-mb", "4", "--master", "local[4]"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-1500:]
     r = subprocess.run(
         [sys.executable, "jobs/decode_job.py", "--warehouse", root, "--output", out,
          "--master", "local[4]"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-1500:]
     line = [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
@@ -85,18 +88,47 @@ def test_verify_job_cli_local_mode(spark, tmp_path):
     r = subprocess.run(
         [sys.executable, "jobs/encode_job.py", "--input", inp, "--warehouse", root,
          "--group-mb", "4", "--master", "local[4]"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-1500:]
     # partition-local verify (default): cogroup on part_id, no doc_id shuffle
     r = subprocess.run(
         [sys.executable, "jobs/verify_job.py", "--input", inp, "--warehouse", root,
          "--group-mb", "4", "--master", "local[4]"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-1500:]
     out = json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
-    assert out == {"rows": 8 * len(fixtures.REGIMES), "mismatches": 0, "ok": True, "mode": "local"}
+    assert out == {"rows": 8 * len(fixtures.REGIMES), "mismatches": 0, "ok": True}
+
+
+def test_verify_job_cli_fails_on_missing_blocks_file(spark, tmp_path):
+    """A warehouse with one committed blocks file removed: verify_job exits
+    1 and reports exactly that part's rows as mismatches."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    inp = str(tmp_path / "tokens")
+    root = str(tmp_path / "wh")
+    generator.write_tokens_table(spark, inp, rows_per_regime=8, num_partitions=2)
+    warehouse.encode_and_commit(spark, inp, root, group_bytes=4 << 20)
+    blocks_dir = os.path.join(root, "blocks")
+    gone = os.path.join(blocks_dir, sorted(os.listdir(blocks_dir))[0])
+    t = pq.read_table(gone, columns=["block_id", "n_rows"])
+    n_gone = sum(n for b, n in zip(t["block_id"].to_pylist(), t["n_rows"].to_pylist()) if b >= 0)
+    assert n_gone > 0
+    os.remove(gone)
+    r = subprocess.run(
+        [sys.executable, "jobs/verify_job.py", "--input", inp, "--warehouse", root,
+         "--group-mb", "4", "--master", "local[4]"],
+        capture_output=True, text=True, cwd=REPO,
+    )
+    assert r.returncode == 1, r.stderr[-1500:]
+    out = json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
+    assert out == {"rows": 8 * len(fixtures.REGIMES), "mismatches": n_gone, "ok": False}
 
 
 def test_manifest_compaction(spark, tmp_path):
