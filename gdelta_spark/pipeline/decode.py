@@ -98,10 +98,9 @@ def _verify_stage(salted_bin_df: DataFrame, blocks_df: DataFrame, shape, schema:
         part = (src_rows if src_rows.num_rows else blks).column("part_id")[0].as_py()
         return shape(part, _compare(src_rows, blks))
 
-    src = partitioning.by_part(salted_bin_df.select("part_id", "doc_id", "tok_bytes"))
     return (
-        src.groupBy("part_id")
-        .cogroup(partitioning.by_part(blocks_df).groupBy("part_id"))
+        salted_bin_df.select("part_id", "doc_id", "tok_bytes").groupBy("part_id")
+        .cogroup(blocks_df.groupBy("part_id"))
         .applyInArrow(kernel, schema=schema)
     )
 

@@ -37,8 +37,7 @@ def spread_input(df: DataFrame) -> DataFrame:
 def by_part(df: DataFrame) -> DataFrame:
     """``df`` hash-partitioned on part_id for a Python kernel stage, which
     (~0.05 GB/s/core) wants many tasks: an explicit count is exempt from
-    AQE's size-based coalescing. A groupBy on part_id reuses it, and stages
-    over one frame share the exchange."""
+    AQE's size-based coalescing, and a groupBy on part_id reuses it."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
     return df.repartition(n, "part_id")
 
