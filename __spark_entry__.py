@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gdelta_spark.ops import ann, dedup, multimodal, textstats
+from gdelta_spark.pipeline import partitioning
 from gdelta_spark.pipeline.session import input_table, sorted_small
 
 SALT_BUDGET_BYTES = 1 << 20  # small so sf0.01 actually exercises salting
@@ -83,7 +84,7 @@ def documents_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _salted_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The derived tokens table, serialized and salted for encode and verify."""
-    from gdelta_spark.pipeline import partitioning, serde
+    from gdelta_spark.pipeline import serde
 
     # materialized once for the salt plan, the encoder and the verify, not
     # re-run by each; recomputed from the parquet input on every call
@@ -139,10 +140,9 @@ def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = documents_tokens(spark, sf_dir)
+    t = partitioning.with_buckets(documents_tokens(spark, sf_dir))
     return sorted_small(
-        t.withColumn("bucket", F.floor(F.log2(F.col("n_tok") + F.lit(1))).cast("int"))
-        .groupBy("source", "bucket")
+        t.groupBy("source", "bucket")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("sum_tok")),
         "source",
         "bucket",
@@ -150,18 +150,11 @@ def _q_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_salt_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = documents_tokens(spark, sf_dir)
+    """The engine's own salt plan of the derived tokens table."""
+    t = partitioning.with_buckets(documents_tokens(spark, sf_dir))
     return (
-        t.withColumn("bucket", F.floor(F.log2(F.col("n_tok") + F.lit(1))).cast("int"))
-        .groupBy("source", "bucket")
-        .agg(F.sum("n_tok").alias("bucket_tokens"))
-        .withColumn(
-            "n_salts",
-            F.greatest(
-                F.lit(1),
-                F.ceil(F.col("bucket_tokens") * 4 / F.lit(SALT_BUDGET_BYTES)).cast("int"),
-            ),
-        )
+        partitioning.salt_plan(t, SALT_BUDGET_BYTES)
+        .select("source", "bucket", "bucket_tokens", "n_salts")
         .orderBy("source", "bucket")
     )
 
@@ -179,10 +172,9 @@ def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_resume_pending(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint/resume anti-join with a deterministic 'committed' set."""
-    t = documents_tokens(spark, sf_dir)
+    t = partitioning.with_buckets(documents_tokens(spark, sf_dir))
     parts = (
-        t.withColumn("bucket", F.floor(F.log2(F.col("n_tok") + F.lit(1))).cast("int"))
-        .groupBy("source", "bucket")
+        t.groupBy("source", "bucket")
         .agg(F.count("*").alias("n_docs"))
     )
     committed = parts.filter(F.col("bucket") % 2 == 0).select("source", "bucket")
@@ -329,7 +321,6 @@ def _q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. Batch part_ids are scoped per micro-batch, so every partition a
     wave touches is encoded (skipped = 0 by construction)."""
     import shutil
-    import tempfile
 
     from gdelta_spark.pipeline import decode as decode_mod
     from gdelta_spark.pipeline import streaming
@@ -343,11 +334,8 @@ def _q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash mismatch instead of a real defect (r3 ADVICE).
     gb = 64 << 20
     oversized = (
-        t.groupBy(
-            "source", F.floor(F.log2(F.col("n_tok") + 1)).cast("int").alias("bucket")
-        )
-        .agg(F.sum("n_tok").alias("s"))
-        .filter(F.col("s") * 4 > gb)
+        partitioning.salt_plan(partitioning.with_buckets(t), gb)
+        .filter(F.col("n_salts") > 1)
         .count()
     )
     if oversized:
@@ -356,7 +344,7 @@ def _q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{oversized} groups exceed the {gb}-byte budget at this SF — "
             "fold ceil(4*sum(n_tok)/group_bytes) into the oracle SQL"
         )
-    tmp = tempfile.mkdtemp(prefix="gdelta_stream_q_")
+    tmp = _stream_tmpdir("gdelta_stream_q_")
     try:
         inbox, root, ckpt = (f"{tmp}/{x}" for x in ("inbox", "wh", "ckpt"))
         waves = []
@@ -397,7 +385,6 @@ def _q_streaming_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``streaming_window_append`` below; complete+memory is the demo shape,
     append is the production shape."""
     import shutil
-    import tempfile
     import uuid
 
     ev = (
@@ -465,7 +452,6 @@ def _q_streaming_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon (the last hour of the stream) are withheld, everything older is
     emitted with full counts."""
     import shutil
-    import tempfile
     import uuid
 
     ev = (
@@ -529,7 +515,6 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch window (hash-checked, not rows-only)."""
     import os
     import shutil
-    import tempfile
     import time as _time
     import uuid
 
@@ -550,7 +535,7 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    tmp = tempfile.mkdtemp(prefix="gdelta_stream_dedup_")
+    tmp = _stream_tmpdir("gdelta_stream_dedup_")
     sink = f"dedup_{uuid.uuid4().hex[:8]}"
     try:
         inbox = f"{tmp}/inbox"

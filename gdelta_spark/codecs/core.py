@@ -15,6 +15,8 @@ for the delta codec (passed separately, mirroring how the reference's
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
 MAGIC = 0x47
@@ -43,6 +45,14 @@ CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 class CorruptBlockError(ValueError):
     """A block payload is malformed: decoding it would read outside its base
     or its own bytes, so it cannot yield the rows that were written."""
+
+
+def read_header(fmt: str, buf: bytes, pos: int = 0) -> tuple:
+    """``struct.unpack_from`` of a payload header; a body too short to hold
+    the header is a ``CorruptBlockError``."""
+    if len(buf) < pos + struct.calcsize(fmt):
+        raise CorruptBlockError(f"{len(buf)} bytes: header {fmt!r} at {pos} runs past the body")
+    return struct.unpack_from(fmt, buf, pos)
 
 
 _ENCODERS = {}

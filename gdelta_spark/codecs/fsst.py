@@ -198,12 +198,16 @@ def fsst_encode(values: np.ndarray) -> bytes:
 
 
 def fsst_decode(buf: bytes) -> np.ndarray:
-    n_bytes, n_sym = struct.unpack_from("<IB", buf, 0)
+    n_bytes, n_sym = core.read_header("<IB", buf)
     if n_bytes == 0:
         return np.empty(0, dtype=np.int32)
     pos = 5
+    if len(buf) < pos + n_sym:
+        raise core.CorruptBlockError(f"{len(buf)} bytes for {n_sym} fsst symbol lengths")
     lens = np.frombuffer(buf, dtype=np.uint8, count=n_sym, offset=pos).astype(np.int64)
     pos += n_sym
+    if len(buf) < pos + int(lens.sum()):
+        raise core.CorruptBlockError(f"{len(buf)} bytes for the fsst symbol table")
     symbols = []
     for ln in lens.tolist():
         symbols.append(buf[pos : pos + ln])
@@ -222,6 +226,8 @@ def fsst_decode(buf: bytes) -> np.ndarray:
         starters = esc_idx[((esc_idx - run_first) & 1) == 0]
     else:
         starters = esc_idx
+    if starters.size and starters[-1] == stream.size - 1:
+        raise core.CorruptBlockError("fsst escape byte ends the stream")
 
     is_literal = np.zeros(stream.size, dtype=bool)
     is_literal[starters + 1] = True
@@ -243,7 +249,7 @@ def fsst_decode(buf: bytes) -> np.ndarray:
     mask = np.arange(MAX_LEN) < all_lens[kinds][:, None]
     data = rows[mask]
     if data.size != n_bytes:
-        raise ValueError(f"fsst decode length mismatch: {data.size} != {n_bytes}")
+        raise core.CorruptBlockError(f"fsst decode length mismatch: {data.size} != {n_bytes}")
     return np.frombuffer(data.tobytes(), dtype="<i4").copy()
 
 

@@ -108,7 +108,7 @@ def _pack_for(vals: np.ndarray) -> bytes:
 
 
 def _unpack_for(buf: bytes, pos: int) -> tuple[np.ndarray, int]:
-    n, lo, width = struct.unpack_from("<IqB", buf, pos)
+    n, lo, width = core.read_header("<IqB", buf, pos)
     pos += 13
     nbytes = (n * width + 7) // 8
     rel = bitunpack(buf[pos : pos + nbytes], n, width)
@@ -126,7 +126,9 @@ def raw_encode(values: np.ndarray) -> bytes:
 
 
 def raw_decode(buf: bytes) -> np.ndarray:
-    (n,) = struct.unpack_from("<I", buf, 0)
+    (n,) = core.read_header("<I", buf)
+    if len(buf) < 4 + 4 * n:
+        raise core.CorruptBlockError(f"{len(buf)} bytes for {n} raw values")
     return np.frombuffer(buf, dtype="<i4", count=n, offset=4).copy()
 
 
@@ -151,7 +153,7 @@ def dict_encode(values: np.ndarray) -> bytes:
 
 
 def dict_decode(buf: bytes) -> np.ndarray:
-    (n,) = struct.unpack_from("<I", buf, 0)
+    (n,) = core.read_header("<I", buf)
     uniq, pos = _unpack_for(buf, 4)
     width = bit_width(uniq.size - 1)
     codes = bitunpack(buf[pos:], n, width).view(np.int64)
@@ -173,7 +175,7 @@ def rle_encode(values: np.ndarray) -> bytes:
 
 
 def rle_decode(buf: bytes) -> np.ndarray:
-    (n,) = struct.unpack_from("<I", buf, 0)
+    (n,) = core.read_header("<I", buf)
     run_vals, pos = _unpack_for(buf, 4)
     run_lens, _ = _unpack_for(buf, pos)
     return np.repeat(run_vals, run_lens).astype(np.int32)
@@ -225,12 +227,14 @@ def dbp_encode(values: np.ndarray) -> bytes:
 
 
 def dbp_decode(buf: bytes) -> np.ndarray:
-    n, first = struct.unpack_from("<Iq", buf, 0)
+    n, first = core.read_header("<Iq", buf)
     if n == 0:
         return np.empty(0, np.int32)
     if n == 1:
         return np.array([first], np.int32)
     nm = (n - 1 + _DBP_MINI - 1) // _DBP_MINI
+    if len(buf) < 12 + nm:
+        raise core.CorruptBlockError(f"{len(buf)} bytes for {nm} miniblock widths")
     widths = np.frombuffer(buf, np.uint8, count=nm, offset=12)
     pos = 12 + nm
     Z = np.zeros((nm, _DBP_MINI), np.uint64)

@@ -130,17 +130,23 @@ def test_compression_effective():
         )
 
 
-@pytest.mark.parametrize("cid", [core.FOR, core.DICT, core.DBP],
-                         ids=[core.CODEC_NAMES[c] for c in (core.FOR, core.DICT, core.DBP)])
+_TRUNCATED = (core.FOR, core.DICT, core.DBP, core.RAW, core.RLE, core.FSST)
+
+
+@pytest.mark.parametrize("cid", _TRUNCATED, ids=[core.CODEC_NAMES[c] for c in _TRUNCATED])
 @pytest.mark.parametrize("cut", [1, 5, 20])
 def test_truncated_bitpacked_body_raises(cid, cut):
-    """A bit-packed body cut short raises CorruptBlockError instead of
-    decoding the missing bits as zeros."""
+    """A body cut short raises CorruptBlockError instead of decoding the
+    missing bits as zeros or failing with an unnamed error. The RLE input is
+    one run, so its cuts land in the FOR headers."""
     r = np.random.default_rng(cid * 100 + cut)
     vals = {
         core.FOR: r.integers(1000, 1256, 500),
         core.DICT: r.choice(r.integers(0, 50000, 20), 500),
         core.DBP: np.cumsum(r.integers(0, 40, 500)),
+        core.RAW: r.integers(-(2**31), 2**31 - 1, 500),
+        core.RLE: np.full(500, 7),
+        core.FSST: r.choice(r.integers(0, 300, 12), 500),
     }[cid].astype(np.int32)
     blob = codecs.encode_block(vals, cid)
     assert np.array_equal(codecs.decode_block(blob), vals)

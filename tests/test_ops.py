@@ -167,6 +167,33 @@ def test_manifest_compaction(spark, tmp_path):
     assert r2["folded"] == 1 and r2["total"] == s["partitions"]
 
 
+def test_encode_compacts_manifests_automatically(spark, tmp_path, monkeypatch):
+    """Once COMPACT_AT_JSONS manifests accumulate, encode_and_commit folds
+    them into the manifest table itself; resume reads the table alone."""
+    root = str(tmp_path / "wh")
+    tokens = generator.tokens_table(spark, rows_per_regime=8, num_partitions=2)
+    tokens.cache().count()
+    monkeypatch.setattr(warehouse, "COMPACT_AT_JSONS", 2)
+    s = warehouse.encode_and_commit(spark, tokens, root, group_bytes=1 << 20)
+    assert s["encoded"] > 2
+
+    wh = warehouse.Warehouse(root)
+    assert [n for n in os.listdir(wh.manifest_dir) if n.endswith(".json")] == []
+    assert len(wh.committed_manifests()) == s["partitions"]
+    s2 = warehouse.encode_and_commit(spark, tokens, root, group_bytes=1 << 20)
+    assert s2["encoded"] == 0 and s2["skipped"] == s["partitions"]
+
+
+def test_encode_empty_input_commits_nothing(spark, tmp_path):
+    """An empty tokens table resolves to zero partitions (both resume counts
+    are observed on a job that reads no rows) and commits nothing."""
+    empty = spark.createDataFrame([], "doc_id string, tokens array<int>, n_tok int, source string")
+    root = str(tmp_path / "wh")
+    s = warehouse.encode_and_commit(spark, empty, root)
+    assert s == {"partitions": 0, "encoded": 0, "skipped": 0}
+    assert warehouse.Warehouse(root).committed_manifests() == []
+
+
 def test_min_label_components_chain_vs_greedy(spark):
     """A chain a~b~c must keep exactly one survivor under connected
     components (greedy pairwise dropping would drop both b and c — the
@@ -314,18 +341,17 @@ def test_committed_df_json_wins_over_table(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from gdelta_spark.pipeline.warehouse import Warehouse
+    from gdelta_spark.pipeline.warehouse import Warehouse, _mname
 
     root = str(tmp_path / "wh")
     wh = Warehouse(root)
-    os.makedirs(wh.manifest_dir, exist_ok=True)
     stale = [
         {"part_id": "p/a", "key_hash": 1, "key_sum": 10, "input_rows": 5},
         {"part_id": "p/b", "key_hash": 2, "key_sum": 20, "input_rows": 6},
     ]
-    pq.write_table(pa.Table.from_pylist(stale), wh._table_path())
+    pq.write_table(pa.Table.from_pylist(stale), wh.table_path)
     fresh = {"part_id": "p/a", "key_hash": 99, "key_sum": 990, "input_rows": 7}
-    with open(os.path.join(wh.manifest_dir, "p_a.json"), "w") as f:
+    with open(os.path.join(wh.manifest_dir, _mname("p/a")), "w") as f:
         _json.dump(fresh, f)
     got = {r["part_id"]: r.asDict() for r in wh.committed_df(spark).collect()}
     assert got["p/a"] == {"part_id": "p/a", "key_hash": 99, "key_sum": 990, "input_rows": 7}
@@ -363,7 +389,7 @@ def test_committed_df_hidden_source_and_corrupt_json(spark, tmp_path):
         pa.Table.from_pylist(
             [{"part_id": "p/c", "key_hash": 5, "key_sum": 50, "input_rows": 9}]
         ),
-        wh._table_path(),
+        wh.table_path,
     )
     with open(os.path.join(wh.manifest_dir, "m-garbage.json"), "w") as f:
         f.write('{"part_id": "p/c", "key_ha')  # truncated mid-write
@@ -374,9 +400,10 @@ def test_committed_df_hidden_source_and_corrupt_json(spark, tmp_path):
     assert len(got) == 2
 
 
-def test_pending_non_broadcast_path(spark, tmp_path, monkeypatch):
-    """(r4 VERDICT #6) Above BROADCAST_ROW_CEILING the committed side must
-    not be force-broadcast; resume semantics are identical either way."""
+def test_pending_non_broadcast_path(spark, tmp_path):
+    """(r4 VERDICT #6) A committed store over Spark's broadcast threshold is
+    shuffled, not broadcast, into the resume anti-join; resume semantics
+    are identical either way."""
     from gdelta_spark.pipeline import generator, warehouse
 
     root = str(tmp_path / "wh")
@@ -385,18 +412,16 @@ def test_pending_non_broadcast_path(spark, tmp_path, monkeypatch):
     s1 = warehouse.encode_and_commit(spark, tokens, root, group_bytes=1 << 20)
     assert s1["encoded"] > 0
 
-    monkeypatch.setattr(warehouse.Warehouse, "BROADCAST_ROW_CEILING", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
     wh = warehouse.Warehouse(root)
-    assert wh.committed_rows_estimate() > 0
-    # above the ceiling the committed side gets NO broadcast hint (below it,
-    # it does — the with_salt stats join keeps its own hint either way)
-    committed = wh.committed_df(spark)
-    plain = wh.maybe_broadcast_committed(committed)
-    assert "Hint broadcast" not in plain._jdf.queryExecution().logical().toString()
-    monkeypatch.setattr(warehouse.Warehouse, "BROADCAST_ROW_CEILING", 10**6)
-    hinted = wh.maybe_broadcast_committed(committed)
-    assert "Hint broadcast" in hinted._jdf.queryExecution().logical().toString()
-    monkeypatch.setattr(warehouse.Warehouse, "BROADCAST_ROW_CEILING", 0)
-    # ...and the full pipeline still resumes correctly without it
-    s2 = warehouse.encode_and_commit(spark, tokens, root, group_bytes=1 << 20)
-    assert s2["encoded"] == 0 and s2["skipped"] == s1["partitions"]
+    dropped = wh.committed_manifests()[0]["part_id"]
+    wh._drop_manifests({dropped})
+    try:
+        s2 = warehouse.encode_and_commit(spark, tokens, root, group_bytes=1 << 20)
+        s3 = warehouse.encode_and_commit(spark, tokens, root, group_bytes=1 << 20)
+    finally:
+        spark.conf.set(key, old)
+    assert s2["encoded"] == 1 and s2["skipped"] == s1["partitions"] - 1
+    assert s3["encoded"] == 0 and s3["skipped"] == s1["partitions"]
