@@ -287,7 +287,9 @@ def _q_fixture_regimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdelta_spark.pipeline import generator
 
     tokens_df = generator.tokens_table(spark, rows_per_regime=24, num_partitions=4)
-    blocks_df = encode_mod.encode_blocks(tokens_df, group_bytes=4 << 20).cache()
+    blocks_df = encode_mod.encode_blocks(
+        tokens_df, group_bytes=4 << 20
+    ).localCheckpoint(eager=False)
     report = decode_mod.verify_roundtrip(tokens_df, blocks_df)
     summary = (
         blocks_df.filter(F.col("block_id") >= 0)

@@ -106,6 +106,8 @@ def _measure_fsst(values: np.ndarray) -> float:
 GDELTA_DOMINANCE = 4.0  # probe-measured gdelta must be this far below the
 # best light-codec ESTIMATE to skip the measured shortlist (probe error
 # margin: the probe measured real output on 3 rows, estimates are models)
+MEASURE_MARGIN = 1.4  # codecs whose estimate is within this factor of the
+# best estimate are measured on a sample slice
 Z1_INCOMPRESSIBLE = 0.97  # zlib-1 sample ratio above which no
 # entropy-based stage (FSST, the block backstop) can plausibly win
 
@@ -124,11 +126,10 @@ def choose_codec(
     values: np.ndarray,
     sample_rows: list[np.ndarray] | None = None,
     base: bytes | None = None,
-    measure_margin: float = 1.4,
 ) -> tuple[int, dict[str, float]]:
     """Pick the winning codec for a block of token values.
 
-    Analytic estimates shortlist codecs within ``measure_margin`` of the best
+    Analytic estimates shortlist codecs within ``MEASURE_MARGIN`` of the best
     estimate; the shortlist is then measured on a sample slice and the
     smallest measured size wins. Returns (codec_id, estimates).
 
@@ -158,7 +159,7 @@ def choose_codec(
     incompressible = z1 > Z1_INCOMPRESSIBLE
     est["fsst"] = est["raw"] if incompressible else _measure_fsst(values)
     best_est = min(est.values())
-    shortlist = [c for c, e in est.items() if e <= best_est * measure_margin]
+    shortlist = [c for c, e in est.items() if e <= best_est * MEASURE_MARGIN]
     if incompressible and "fsst" in shortlist:
         # est['fsst'] == est['raw'] here, so fsst enters the shortlist
         # whenever raw does and the measured loop would still pay the FSST

@@ -16,6 +16,8 @@ def tokens_to_bytes(values: np.ndarray) -> bytes:
 
 
 def bytes_to_tokens(buf: bytes) -> np.ndarray:
+    if len(buf) % 4:
+        raise core.CorruptBlockError("gdelta row is not a whole number of int32 tokens")
     return np.frombuffer(buf, dtype="<i4").copy()
 
 

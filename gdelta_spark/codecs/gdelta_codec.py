@@ -8,6 +8,9 @@ shares across a group's rows; the encoder itself is
 vectorization: Gear fingerprints for *all* positions are computed as one
 fixed-weight sliding sum, candidate verification is a bulk 16-byte window
 compare, and the greedy resolution loop iterates per *match* (not per byte).
+The decoder has one path, ``gdelta_decode_batch``: a block's row streams
+are parsed together into (flag, length, offset) arrays with no per-unit
+loop, then assembled by gather or memcpy; a single blob is a 1-row batch.
 
 Blob format (reverse-engineered; all citations into /root/reference/):
 
@@ -101,103 +104,50 @@ def write_unit(inst: bytearray, flag: int, length: int, offset: int) -> None:
             write_varint(inst, offset)
 
 
-def read_unit(buf, pos: int) -> tuple[int, int, int, int]:
-    """Read one unit at ``pos``; return (flag, length, offset, next_pos)."""
-    head = buf[pos]
-    pos += 1
-    flag = head & 1
-    more = (head >> 1) & 1
-    length = head >> 2  # 6-bit field; writer only ever stores bit0 here
-    if more:
-        hi, pos = read_varint(buf, pos)
-        length |= hi << 1
-    offset = 0
-    if flag:
-        offset, pos = read_varint(buf, pos)
-    return flag, length, offset, pos
-
-
 def _varint_values(s64: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
     """Vectorized varint decode for many spans at once: value of the varint
     spanning bytes [starts[i], ends[i]] (inclusive) of ``s64`` for every i.
-    One array pass per byte of the longest varint (<= 10)."""
+    One array pass per byte of the longest varint. A varint longer than 8
+    bytes (a value of 2**56 or more, which no block can address) is a
+    ``CorruptBlockError``: it would overflow the int64 unit arithmetic."""
     vals = np.zeros(starts.size, np.uint64)
     if starts.size == 0:
         return vals
     span = ends - starts
-    for k in range(int(span.max()) + 1):
+    top = int(span.max())
+    if top >= 8:
+        raise CorruptBlockError("gdelta varint longer than 8 bytes")
+    for k in range(top + 1):
         m = span >= k
         vals[m] |= (s64[starts[m] + k] >> np.uint64(1)) << np.uint64(7 * k)
     return vals
 
 
-# below ~1 KiB of instruction stream the plain per-unit loop beats numpy's
-# fixed per-array-op overhead (measured crossover ~300 units)
-_VEC_MIN_INST = 1024
-
-
-def _parse_units_scalar(
-    delta: bytes, pos: int, inst_end: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    flags: list[int] = []
-    lengths: list[int] = []
-    offsets: list[int] = []
-    while pos < inst_end:
-        f, ln, off, pos = read_unit(delta, pos)
-        flags.append(f)
-        lengths.append(ln)
-        offsets.append(off)
-    return (
-        np.asarray(flags, np.int64),
-        np.asarray(lengths, np.int64),
-        np.asarray(offsets, np.int64),
-        inst_end,
-    )
-
-
-def parse_units_arrays(
-    delta: bytes,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    """Batch unit parse: delta blob -> (flags, lengths, offsets) numpy arrays
-    plus the literal data stream offset (SURVEY §2.1 row 2's vectorized
-    design). Mirrors the reference *reader* (gdelta.cpp:124-139): the
-    length-continuation varint is consumed only when ``more`` is set, so the
-    writer's always-emitted stray 0x00 re-parses as a zero-length phantom
-    unit, exactly as in C++.
-
-    The vectorized path has NO per-unit Python loop. Cut the stream into
-    segments ending at each varint-terminator byte (more-bit 0). A unit is
-    then 1 or 2 consecutive segments: a head whose ``more`` bit is set is
-    followed by exactly one continuation segment (its next varint), so a
-    segment is a continuation iff the run of set more-bits at segment starts
-    immediately before it has odd length — an accumulate/arange computation.
-    Head fields and all varint values are then extracted with masked array
-    ops (one pass per varint byte, <= 10).
-    """
-    inst_len, pos = read_varint(delta, 0)
-    inst_end = pos + inst_len
-    if inst_len == 0:
-        e = np.empty(0, np.int64)
-        return e, e, e, inst_end
-    if inst_len < _VEC_MIN_INST:
-        return _parse_units_scalar(delta, pos, inst_end)
-    s = np.frombuffer(delta, np.uint8, count=inst_len, offset=pos)
-    if s[-1] & 1:  # stream must end at a terminator; fall back if malformed
-        return _parse_units_scalar(delta, pos, inst_end)
-    flags, lengths, offsets, _ = _parse_stream(s)
-    return flags, lengths, offsets, inst_end
-
-
 def _parse_stream(
     s: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized unit parse of a raw instruction stream (see
-    ``parse_units_arrays`` for the algorithm); additionally returns each
-    unit's head byte position within ``s`` — the hook that lets the batch
-    decoder parse MANY rows' streams concatenated into one array (each
-    stream ends at a terminator, and a 0x00 separator byte between streams
-    re-parses as a zero-length phantom unit whose a==0 head also resets the
-    continuation-parity run, so per-row streams cannot alias)."""
+    """Batch unit parse of a raw instruction stream (SURVEY §2.1 row 2's
+    vectorized design): ``s`` -> (flags, lengths, offsets, head positions)
+    int64 arrays, one entry per unit. Mirrors the reference *reader*
+    (gdelta.cpp:124-139): the length-continuation varint is consumed only
+    when ``more`` is set, so the writer's always-emitted stray 0x00
+    re-parses as a zero-length phantom unit, exactly as in C++.
+
+    There is NO per-unit Python loop. Cut the stream into segments ending
+    at each varint-terminator byte (more-bit 0). A unit is then 1 or 2
+    consecutive segments: a head whose ``more`` bit is set is followed by
+    exactly one continuation segment (its next varint), so a segment is a
+    continuation iff the run of set more-bits at segment starts immediately
+    before it has odd length — an accumulate/arange computation. Head
+    fields and all varint values are then extracted with masked array ops
+    (one pass per varint byte, <= 8).
+
+    The head positions let the batch decoder parse MANY rows' streams
+    concatenated into one array: each stream ends at a terminator, and a
+    0x00 separator byte between streams re-parses as a zero-length phantom
+    unit whose a==0 head also resets the continuation-parity run, so
+    per-row streams cannot alias. ``s`` must end at a terminator; a stream
+    that ends inside a unit raises ``CorruptBlockError``."""
     term = np.flatnonzero((s & 1) == 0).astype(np.int64)
     n_seg = term.size
     seg_start = np.empty(n_seg, np.int64)
@@ -213,6 +163,10 @@ def _parse_stream(
     cont = np.zeros(n_seg, bool)
     cont[1:] = ((idx[:-1] - last0[:-1]) & 1) == 1
     head_seg = np.flatnonzero(~cont)
+    # a head with more=1 reads the segment after it: only the last head can
+    # lack one, when the stream is cut inside its unit
+    if a[head_seg[-1]] and head_seg[-1] == n_seg - 1:
+        raise CorruptBlockError("gdelta unit runs past its stream")
 
     hb = b0[head_seg]
     flags = hb & 1
@@ -269,34 +223,6 @@ def _row_header(payload, st: int, ln: int) -> tuple[int, int]:
     return pos, il
 
 
-def _decode_row(payload, pos: int, inst_end: int, end: int, base: bytes) -> bytes:
-    """Per-unit decode of one row delta: instruction stream
-    ``payload[pos:inst_end]``, literal bytes from ``inst_end`` up to ``end``
-    (mirrors gdelta.cpp:533-567); assembly is slice-level memcpy. A copy
-    past ``base``, or a unit or literal past the row, is a
-    ``CorruptBlockError``."""
-    parts = []
-    data_pos = inst_end
-    nb = len(base)
-    try:
-        while pos < inst_end:
-            flag, length, offset, pos = read_unit(payload, pos)
-            if length == 0:
-                continue
-            if flag:
-                if offset + length > nb:
-                    raise CorruptBlockError("gdelta copy unit reads past its base")
-                parts.append(base[offset : offset + length])
-            else:
-                parts.append(payload[data_pos : data_pos + length])
-                data_pos += length
-    except IndexError:
-        raise CorruptBlockError("gdelta unit runs past its payload") from None
-    if pos != inst_end or data_pos > end:
-        raise CorruptBlockError("gdelta unit or literal runs past its row")
-    return b"".join(parts)
-
-
 def gdelta_decode(delta: bytes, base: bytes) -> bytes:
     """Interpret one delta blob against ``base``; returns the target bytes."""
     return gdelta_decode_batch(delta, [(0, len(delta))], base)[0]
@@ -308,30 +234,19 @@ def gdelta_decode_batch(
     """Decode the row deltas stored at ``payload[st:st+ln]`` for each
     ``(st, ln)`` in ``spans`` against ``base``.
 
-    Blocks with enough instruction bytes decode with one vectorized parse
-    and one assembly pass (SURVEY §2.1 row 2): the rows' instruction
-    streams concatenate into one array (0x00 separators re-parse as
-    zero-length phantom units whose a==0 head resets the
-    continuation-parity run — see ``_parse_stream``), so the numpy fixed
-    costs (~80us) are paid once per block, not once per row. Sparse
-    streams (few long units per row — near-dup rows) and short blocks are
-    memcpy-bound and decode row by row in ``_decode_row`` instead; so do
-    empty or unterminated streams. Both paths raise ``CorruptBlockError``
-    on a copy past ``base`` or a unit or literal past its row."""
+    Every block decodes with one vectorized parse and one assembly pass
+    (SURVEY §2.1 row 2): the rows' instruction streams concatenate into one
+    array (0x00 separators re-parse as zero-length phantom units whose a==0
+    head resets the continuation-parity run — see ``_parse_stream``), so
+    the numpy fixed costs are paid once per block, not once per row.
+    Assembly is a byte gather over ``base ++ payload`` when units are short
+    and slice-level memcpy when they are long. A unit cut short, a varint
+    longer than 8 bytes, a copy past ``base`` or a literal past its row
+    raises ``CorruptBlockError``."""
     n = len(spans)
     if n == 0:
         return []
     heads = [_row_header(payload, st, ln) for st, ln in spans]
-    # dispatch on a header SAMPLE: blocks are cluster-homogeneous, so 16
-    # rows' instruction bytes predict the rest; below ~1 KiB (about 300
-    # units) the per-unit loop beats the batch machinery's fixed costs
-    if sum(il for _, il in heads[:16]) < _VEC_MIN_INST or any(
-        il == 0 or payload[pos + il - 1] & 1 for pos, il in heads
-    ):
-        return [
-            _decode_row(payload, pos, pos + il, st + ln, base)
-            for (pos, il), (st, ln) in zip(heads, spans)
-        ]
     inst_start = np.array([pos for pos, _ in heads], np.int64)
     inst_lens = np.array([il for _, il in heads], np.int64)
     span_end = np.array([st + ln for st, ln in spans], np.int64)
@@ -361,7 +276,6 @@ def gdelta_decode_batch(
     ins_len = np.where(ins, lengths, 0)
     p_excl = np.cumsum(ins_len) - ins_len  # exclusive global insert prefix
     first_unit = np.searchsorted(row_id, np.arange(n), side="left")
-    first_unit = np.minimum(first_unit, max(row_id.size - 1, 0))
     ins_abs = data_pos[row_id] + (p_excl - p_excl[first_unit][row_id])
 
     keep = lengths > 0  # drops separator phantoms and real phantom units
@@ -373,15 +287,14 @@ def gdelta_decode_batch(
         raise CorruptBlockError("gdelta copy unit reads past its base")
     if ((fl == 0) & (src - base8.size + ln > span_end[rid])).any():
         raise CorruptBlockError("gdelta literal runs past its row")
-    row_out = np.zeros(n, np.int64)
-    np.add.at(row_out, rid, ln)
-
-    n_out = int(ln.sum())
-    bounds = np.concatenate(([0], np.cumsum(row_out)))
     if ln.size == 0:
         return [b""] * n
+    n_out = int(ln.sum())
     if n_out < 128 * ln.size:
         # short units: one jump-cumsum gather over (base ++ payload)
+        row_out = np.zeros(n, np.int64)
+        np.add.at(row_out, rid, ln)
+        bounds = np.concatenate(([0], np.cumsum(row_out)))
         combined = np.concatenate((base8, p8))
         out_starts = np.cumsum(ln) - ln
         idx = np.ones(n_out, np.int64)
@@ -391,8 +304,7 @@ def gdelta_decode_batch(
         np.cumsum(idx, out=idx)
         big = combined[idx]
         return [big[bounds[r] : bounds[r + 1]].tobytes() for r in range(n)]
-    # long units: slice-level memcpy beats a byte gather; the batched parse
-    # is still amortized
+    # long units: slice-level memcpy beats a byte gather
     parts: list[list[bytes]] = [[] for _ in range(n)]
     bsz = base8.size
     for r, f, l_, s_ in zip(rid.tolist(), fl.tolist(), ln.tolist(), src.tolist()):

@@ -50,10 +50,6 @@ _SIG_MULT_2 = np.uint64(0xC2B2AE3D27D4EB4F)
 MIN_CLUSTER_ROWS = 3
 
 
-_SIG_MULT_3 = np.uint64(0x165667B19E3779F9)
-_SIG_MULT_4 = np.uint64(0x27D4EB2F165667C5)
-
-
 def _hash_lanes(v: np.ndarray) -> np.ndarray:
     # 2-lane multiply-xor over 16-byte windows: cheap (3 temporaries) and
     # the window space is still ~vocab^4, so spurious collisions are rare

@@ -13,8 +13,8 @@ from conftest import REF_SRC, REPO
 from gdelta_oracle import gdelta_encode as oracle_encode
 
 from gdelta_spark.codecs.gdelta_codec import (
+    _parse_stream,
     gdelta_decode,
-    parse_units_arrays,
     read_varint,
     write_unit,
     write_varint,
@@ -24,6 +24,14 @@ from gdelta_spark.codecs.gdelta_group import gdelta_encode_group
 
 def gdelta_encode(target: bytes, base: bytes) -> bytes:
     return gdelta_encode_group([target], base)[0]
+
+
+def parse_units(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, int]:
+    """(flags, lengths, offsets, head positions, literal start) of one delta
+    blob, parsed by the decoder's own stream parser."""
+    il, pos = read_varint(blob, 0)
+    flags, lengths, offsets, heads = _parse_stream(np.frombuffer(blob, np.uint8, il, pos))
+    return flags, lengths, offsets, heads, pos + il
 
 rng = np.random.default_rng(42)
 
@@ -126,7 +134,7 @@ def test_parse_units_phantoms():
     base = b"A" * 100
     target = b"A" * 100 + b"B"
     delta = gdelta_encode(target, base)
-    flags, lengths, offsets, _ = parse_units_arrays(delta)
+    flags, lengths, offsets, _, _ = parse_units(delta)
     # COPY 100 @0, then the 1-byte literal whose stray 0x00 is the phantom
     assert flags.tolist() == [1, 0, 0]
     assert lengths.tolist() == [100, 1, 0]
@@ -234,16 +242,18 @@ def _join_payload(blobs: list[bytes]) -> bytes:
     return struct.pack("<I", len(blobs)) + _pack_for(lens) + b"".join(blobs)
 
 
-def _rewrite_first_copy(blob: bytes, offset: int) -> bytes:
-    """``blob`` with its first COPY unit's base offset replaced."""
-    flags, lengths, offsets, inst_end = parse_units_arrays(blob)
+def _rewrite_first_copy(blob: bytes, offset: int | None = None, length: int | None = None) -> bytes:
+    """``blob`` with its first COPY unit's base offset and/or length replaced."""
+    flags, lengths, offsets, _, inst_end = parse_units(blob)
     inst = bytearray()
     done = False
     for f, ln, off in zip(flags.tolist(), lengths.tolist(), offsets.tolist()):
         if ln == 0:
             continue  # write_unit re-emits the phantoms itself
         if f and not done:
-            off, done = offset, True
+            off = off if offset is None else offset
+            ln = ln if length is None else length
+            done = True
         write_unit(inst, f, ln, off)
     assert done
     head = bytearray()
@@ -251,13 +261,29 @@ def _rewrite_first_copy(blob: bytes, offset: int) -> bytes:
     return bytes(head) + bytes(inst) + blob[inst_end:]
 
 
+def _shrink_inst_len(blob: bytes) -> bytes:
+    """``blob`` with its instruction length shrunk so the stream ends right
+    after its first COPY unit's head byte, inside that unit's length varint
+    (the bytes after it become literal data)."""
+    flags, _, _, heads, _ = parse_units(blob)
+    _, pos = read_varint(blob, 0)
+    head = bytearray()
+    write_varint(head, int(heads[np.flatnonzero(flags == 1)[0]]) + 1)
+    return bytes(head) + blob[pos:]
+
+
 @pytest.mark.parametrize("regime", ["near-dup", "texty"])
 @pytest.mark.parametrize("n_rows", [1, 12])
-@pytest.mark.parametrize("fault", ["copy-past-base", "literal-truncated"])
+@pytest.mark.parametrize(
+    "fault",
+    ["copy-past-base", "copy-offset-wraps", "literal-truncated", "inst-len-shrunk", "row-not-int32"],
+)
 def test_corrupt_payload_raises(regime, n_rows, fault):
-    """A row payload with one copy offset past the base, or with one row's
-    literal region cut short, raises CorruptBlockError on both decode paths
-    (one row decodes in the per-unit loop, twelve in one batch) and never
+    """A row payload with one copy offset past the base (or so far past it
+    that it wraps an int64), one row's literal region cut short, one row's
+    instruction stream ending inside a unit, or one row decoding to a byte
+    count that is not a whole number of int32 tokens raises
+    CorruptBlockError for a one-row and a twelve-row block and never
     returns rows."""
     from gdelta_spark.codecs import delta
     from gdelta_spark.codecs.core import CorruptBlockError
@@ -269,13 +295,56 @@ def test_corrupt_payload_raises(regime, n_rows, fault):
     blobs = _split_payload(payload)
     k = n_rows // 2  # a middle row: its overrun would read the next row
     if fault == "copy-past-base":
-        blobs[k] = _rewrite_first_copy(blobs[k], len(base) - 8)
-    else:
-        _, _, _, inst_end = parse_units_arrays(blobs[k])
+        blobs[k] = _rewrite_first_copy(blobs[k], offset=len(base) - 8)
+    elif fault == "copy-offset-wraps":
+        blobs[k] = _rewrite_first_copy(blobs[k], offset=2**64 - 8)
+    elif fault == "literal-truncated":
+        *_, inst_end = parse_units(blobs[k])
         assert len(blobs[k]) > inst_end  # the row has literal bytes to cut
         blobs[k] = blobs[k][:-1]
+    elif fault == "inst-len-shrunk":
+        blobs[k] = _shrink_inst_len(blobs[k])
+    else:
+        flags, lengths, _, _, _ = parse_units(blobs[k])
+        blobs[k] = _rewrite_first_copy(blobs[k], length=int(lengths[flags == 1][0]) - 1)
     with pytest.raises(CorruptBlockError):
         delta.gdelta_rows_decode(_join_payload(blobs), base)
+
+
+@pytest.mark.parametrize("regime", ["near-dup", "texty", "mixed-dup"])
+@pytest.mark.parametrize("n_rows", [1, 12])
+def test_stream_fuzz_decodes_or_raises(regime, n_rows):
+    """Fixed-seed single-bit flips and truncations inside the row delta
+    streams (never the block header or the FOR-packed lens): every input
+    decodes or raises CorruptBlockError, and nothing else escapes."""
+    from gdelta_spark.codecs import delta
+    from gdelta_spark.codecs.core import CorruptBlockError
+    from gdelta_spark.fixtures import make_tokens
+
+    arrays = [make_tokens(3, regime, i) for i in range(n_rows + 1)]
+    base = arrays[0].astype("<i4").tobytes()
+    payload = delta.gdelta_rows_payload(arrays[1:], base)
+    blobs = _split_payload(payload)
+    streams_at = len(payload) - sum(map(len, blobs))
+    fuzz = np.random.default_rng(3)
+    cases = []
+    for p in fuzz.integers(streams_at, len(payload), 60).tolist():
+        for bit in range(8):
+            flipped = bytearray(payload)
+            flipped[p] ^= 1 << bit
+            cases.append(bytes(flipped))
+    for k in {0, n_rows // 2, n_rows - 1}:
+        for cut in fuzz.integers(1, len(blobs[k]) + 1, 10).tolist():
+            cut_blobs = list(blobs)
+            cut_blobs[k] = blobs[k][:-cut]
+            cases.append(_join_payload(cut_blobs))
+    rejected = 0
+    for case in cases:
+        try:
+            delta.gdelta_rows_decode(case, base)
+        except CorruptBlockError:
+            rejected += 1
+    assert rejected > 0
 
 
 def test_rewritten_payload_still_decodes():
@@ -288,9 +357,9 @@ def test_rewritten_payload_still_decodes():
         arrays = [make_tokens(7, regime, i) for i in range(13)]
         base = arrays[0].astype("<i4").tobytes()
         blobs = _split_payload(delta.gdelta_rows_payload(arrays[1:], base))
-        flags, _, offsets, _ = parse_units_arrays(blobs[6])
+        flags, _, offsets, _, _ = parse_units(blobs[6])
         first = int(offsets[np.flatnonzero(flags == 1)[0]])
-        blobs[6] = _rewrite_first_copy(blobs[6], first)
+        blobs[6] = _rewrite_first_copy(blobs[6], offset=first)
         out = delta.gdelta_rows_decode(_join_payload(blobs), base)
         assert all(np.array_equal(a, b) for a, b in zip(out, arrays[1:]))
 
