@@ -275,6 +275,7 @@ def gdelta_decode_batch(
     ins = flags == 0
     ins_len = np.where(ins, lengths, 0)
     p_excl = np.cumsum(ins_len) - ins_len  # exclusive global insert prefix
+    # every row owns at least its separator unit (checked above)
     first_unit = np.searchsorted(row_id, np.arange(n), side="left")
     ins_abs = data_pos[row_id] + (p_excl - p_excl[first_unit][row_id])
 

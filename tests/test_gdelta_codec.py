@@ -33,6 +33,7 @@ def parse_units(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.nda
     flags, lengths, offsets, heads = _parse_stream(np.frombuffer(blob, np.uint8, il, pos))
     return flags, lengths, offsets, heads, pos + il
 
+
 rng = np.random.default_rng(42)
 
 
